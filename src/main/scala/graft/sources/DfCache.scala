@@ -20,9 +20,10 @@ import org.apache.spark.storage.StorageLevel
   * evicted (unpersist + recompute-on-next-touch — correctness never
   * depends on residency). Corpus-identity families (`index:`, one entry
   * per data dir) never approach the cap; the probe-derived families
-  * (`rowkeys:`, `qmaps:`, `tablebits:`, ... — one entry per
-  * distinct probe batch) are exactly what leaked storage in a
-  * long-lived serve session.
+  * (`colscores:` — one per (index, query maps) pair, the default
+  * search's narrow column scores — `rowkeys:`, `anchors:`, `qmaps:`,
+  * `tablebits:`, ... — one entry per distinct probe batch) are exactly
+  * what leaked storage in a long-lived serve session.
   */
 object DfCache {
 

@@ -196,11 +196,19 @@ class JoinSearchSpec extends SparkTestBase {
 
   test("auto dispatch routes by query size against the broadcast threshold") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    // the hinted route's broadcasts sit inside the `colscores:` fill,
+    // so descend into cached fills (the IndexStreamSpec convention).
+    def joinsIn(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
+      case _: BroadcastHashJoinExec | _: BroadcastNestedLoopJoinExec =>
+        1 + p.children.map(joinsIn).sum
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        joinsIn(a.inputPlan)
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        joinsIn(s.relation.cachedPlan)
+      case other => other.children.map(joinsIn).sum
+    }
     def broadcastJoins(df: org.apache.spark.sql.DataFrame): Int =
-      df.queryExecution.sparkPlan.collect {
-        case b: BroadcastHashJoinExec => b
-        case n: BroadcastNestedLoopJoinExec => n
-      }.size
+      joinsIn(df.queryExecution.sparkPlan)
     // under the default threshold the tiny query takes the hinted
     // plan — broadcast joins present.
     val hinted = JoinSearch.searchTablesAuto(index, query, cols)

@@ -53,11 +53,19 @@ class PlanGoldenSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  private val drift = scala.collection.mutable.ArrayBuffer.empty[String]
+  /** One test's pins: each test collects and asserts only its own
+    * drift, so a moved pin fails the test that owns it and no other.
+    */
+  private final class Pins {
+    private val drift = scala.collection.mutable.ArrayBuffer.empty[String]
 
-  private def pin(name: String, golden: Ex)(build: => DataFrame): Unit = {
-    val got = exchanges(build)
-    if (got != golden) drift += s"$name: $got != golden $golden"
+    def apply(name: String, golden: Ex)(build: => DataFrame): Unit = {
+      val got = exchanges(build)
+      if (got != golden) drift += s"$name: $got != golden $golden"
+    }
+
+    def check(): Unit =
+      assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
   }
 
   private def idx = IndexBuilder.cached(spark, dir)
@@ -65,6 +73,7 @@ class PlanGoldenSpec extends SparkTestBase {
   private def partQ = Queries.partQuery(spark, dir)
 
   test("golden exchange counts: the five flagship plans") {
+    val pin = new Pins
     // 9/4/3 -> 5/3/2 (round-17 optimization): one query-side distinct
     // dropped from prepareInput; the anchor/req derivation collapsed
     // to ONE aggregation (was distinct + window + groupBy + join);
@@ -92,7 +101,12 @@ class PlanGoldenSpec extends SparkTestBase {
     // query-sized data — session-persists too; the warm plan is the
     // cached key-set scan joined to the cached anchors broadcast plus
     // the two scoring exchanges (column scores, top-columns window).
-    pin("search", Ex(2, 1, 0)) {
+    // 2/1/0 -> 0/0/0 (colscores persist): the column scores persist
+    // as one cached partition, so the key-set scan, the anchors
+    // broadcast and the column-score exchange live inside the fill,
+    // and the top-columns window needs no exchange over a single
+    // partition; the warm plan is the cached scan plus the tail.
+    pin("search", Ex(0, 0, 0)) {
       JoinSearch.searchTables(idx, custQ, Queries.customerCols)
     }
     // 17/9/7 -> 10/6/2: the same three cuts, once per query branch
@@ -142,10 +156,11 @@ class PlanGoldenSpec extends SparkTestBase {
     // re-tokenizing the corpus — the toks lineage's exchanges moved
     // inside the InMemoryRelation.
     pin("bm25", Ex(2, 4, 1)) { TextAnalysis.bm25TopK(spark, dir) }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("golden exchange counts: the round-8 additions") {
+    val pin = new Pins
     pin("postings_packed", Ex(3, 0, 0)) {
       graft.sources.PostingsPack.packStats(idx)
     }
@@ -155,10 +170,11 @@ class PlanGoldenSpec extends SparkTestBase {
     pin("bpe_tokens", Ex(2, 1, 0)) {
       graft.operators.Bpe.tokens(spark, dir)
     }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("golden exchange counts: the round-8d additions") {
+    val pin = new Pins
     // 7/5/1 -> 8/4/0 when the text tower went artifact-served
     // (round 9): the tokenize lineage (and its reused exchange +
     // one broadcast) left the plan; the extra shuffle is the
@@ -215,10 +231,11 @@ class PlanGoldenSpec extends SparkTestBase {
     pin("hybrid_batch", Ex(4, 0, 0)) {
       graft.operators.Hybrid.rrfTopKBatch(spark, dir)
     }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("golden exchange counts: the round-9 artifact-served paths") {
+    val pin = new Pins
     // indexed phrase retrieval through the LIVE view (base artifact,
     // no deltas accumulated): the pushed In(term) probe keeps the
     // budget to the doc-keyed aggregation + the anchor broadcasts.
@@ -260,10 +277,11 @@ class PlanGoldenSpec extends SparkTestBase {
     pin("bpe_fertility", Ex(3, 2, 0)) {
       graft.operators.Bpe.fertility(spark, dir)
     }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("golden exchange counts: the round-8e additions") {
+    val pin = new Pins
     // heavy hitters: the load-bearing property is that the FIRST
     // corpus-sized exchange is bucket-keyed (<= `buckets` partial
     // rows per task) and the only term-keyed exchange sees hot-bucket
@@ -290,10 +308,11 @@ class PlanGoldenSpec extends SparkTestBase {
     pin("keep_best", Ex(2, 1, 0)) {
       Dedup.keepBestQuery(spark, dir)
     }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("golden exchange counts: manifest-served live views with deltas present") {
+    val pin = new Pins
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     // land ONE committed delta in each family (the DeltaLog manifest
@@ -326,10 +345,11 @@ class PlanGoldenSpec extends SparkTestBase {
     pin("ivf_probe_live_delta", Ex(4, 4, 3)) {
       graft.operators.Similarity.ivfProbeLive(spark, dir, k = 3, probeMod = 100)
     }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("golden exchange counts: the round-11 pins for the final-round-10 additions") {
+    val pin = new Pins
     // winnow fingerprint selection: hashing, window arg-min and
     // explode are row-local array arithmetic (the 100 TB shape — no
     // shuffle carries corpus-derived rows), so the budget is the
@@ -418,10 +438,11 @@ class PlanGoldenSpec extends SparkTestBase {
     pin("line_quality", Ex(1, 0, 0)) {
       TextAnalysis.lineQuality(spark, dir)
     }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("golden exchange counts: the round-15 fraction-capped search") {
+    val pin = new Pins
     // the deployment-default hot-key guard (cap = 5 % of total
     // postings, round-14 verdict #4) must price its corpus-derived
     // threshold in BROADCAST-SIZED pieces only: the per-key stats and
@@ -448,7 +469,7 @@ class PlanGoldenSpec extends SparkTestBase {
       JoinSearch.searchTablesCappedFraction(
         idx, Queries.ordersQuery(spark, dir), Queries.ordersCols)
     }
-    assert(drift.isEmpty, s"plans drifted:\n${drift.mkString("\n")}")
+    pin.check()
   }
 
   test("the guard sees a deliberately added exchange") {
