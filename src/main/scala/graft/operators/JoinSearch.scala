@@ -16,7 +16,7 @@ import graft.functions.Tokenize
   * stages exposed for testing and for the per-stage oracle queries:
   *
   *   prepareInput (P1-P5+F1) -> mappings (F2+G1) -> probe (J5, one
-  *   distributed semi-join replacing per-column IN-list SQL) ->
+  *   distributed probe replacing per-column IN-list SQL) ->
   *   reduce (P6+W1) -> joinMapped (J1) -> matches (W2) ->
   *   columnScores (A1) -> topColumns (W3) -> tableScores (A2+O2/O3)
   *
@@ -97,7 +97,14 @@ object JoinSearch {
 
   /** J5: one distributed semi-join replaces the reference's per-column
     * `WHERE tokenized IN (...)` literal-list SQL round-trips
-    * (`handlers.py:62-71`, `Par_Search.py:196-200`).
+    * (`handlers.py:62-71`, `Par_Search.py:196-200`). The staged,
+    * capped, seq-parity and cross-check strategies probe this way.
+    * [[searchTables]] instead filters on the query's distinct key list
+    * — the reference's IN list, once for all columns: the same
+    * postings, but the key set is a plan literal rather than a
+    * broadcast the plan must first compute and ship, a job and a
+    * stage round that a live index (whose identity moves with every
+    * landed batch) paid on every search.
     */
   def probe(index: DataFrame, maps: DataFrame): DataFrame =
     index.join(broadcast(maps.select("key").distinct()), Seq("key"), "left_semi")
@@ -110,14 +117,15 @@ object JoinSearch {
     * the SAME few query tables across ~30 search invocations per
     * session. In the anchored strategies those branches now sit
     * inside cached fills ([[searchTables]]' `colscores:`, the
-    * `rowkeys:` and `anchors:` frames), so a warm [[searchTables]]
-    * reads the maps frame only for its semantic hash, half of the
-    * `colscores:` key. The frame is query-table-sized (tiny by the
-    * small-query contract of every hinted strategy — the
-    * no-assumptions [[searchTablesShuffled]] path deliberately stays
-    * unpersisted, a one-shot huge query should not be materialized to
-    * executor storage), keyed by its own semantic hash like the other
-    * shared lineages.
+    * `rowkeys:` and `anchors:` frames of the other forms), so a warm
+    * [[searchTables]] reads the maps frame only for its semantic
+    * hash, half of the `colscores:` key; a `colscores:` miss reads
+    * its key list once per maps hash ([[queryKeys]]). The frame is
+    * query-table-sized (tiny by the small-query contract of every
+    * hinted strategy — the no-assumptions [[searchTablesShuffled]]
+    * path deliberately stays unpersisted, a one-shot huge query
+    * should not be materialized to executor storage), keyed by its
+    * own semantic hash like the other shared lineages.
     */
   private def preparedMappings(query: DataFrame, cols: Seq[String]): DataFrame =
     preparedMappingsHashed(query, cols)._1
@@ -131,6 +139,19 @@ object JoinSearch {
     val h = m.semanticHash()
     (graft.sources.DfCache.getOrPersist(query.sparkSession, s"qmaps:$h")(m), h)
   }
+
+  /** The distinct keys of a [[preparedMappingsHashed]] frame, collected
+    * to the driver once per maps hash and session-memoized (`qkeys:`):
+    * [[searchTables]]' literal probe list. The maps frame is
+    * query-sized by the same small-query contract that lets the other
+    * hinted strategies broadcast it, so the list is what their
+    * broadcasts collect anyway; sorted, so one query keeps one plan.
+    */
+  private def queryKeys(maps: DataFrame, mapsHash: Int): Seq[String] =
+    graft.sources.DfCache.memo(maps.sparkSession, s"qkeys:$mapsHash") {
+      maps.select("key").collect().flatMap(r => Option(r.getString(0)))
+        .distinct.sorted.toSeq
+    }
 
   /** S4 generalized: pattern probe. The reference routes every probe
     * through a `LIKE` template (`handlers.py:73-83`) but never
@@ -343,12 +364,18 @@ object JoinSearch {
     */
   /** Per-key posting counts over an index, session-cached: the
     * anchor-selection statistic as a BUILD-TIME artifact rather than
-    * a per-query pass. Without it every anchored search scans the
-    * index twice (once under the anchor-statistic lineage, once
-    * under the row key sets); with it, once — the stats scan
-    * amortizes over every query in the session. On a cluster this
-    * table is written beside the snapshot (vocabulary-sized, thin)
-    * exactly like an ANALYZE artifact.
+    * a per-query pass, for the capped, seq-parity, pruned, column and
+    * batch forms (the hot-key guard needs every key's df, not only
+    * the probed ones). Without it those searches scan the index twice
+    * (once under the anchor-statistic lineage, once under the row key
+    * sets); with it, once — the stats scan amortizes over every query
+    * in the session. [[searchTables]] does not read it: it counts its
+    * probe output instead, which for every query key is the same
+    * number and, over a live index that changes identity per landed
+    * batch, avoids a whole-index aggregation and an `idxstats:` entry
+    * per batch. On a cluster this table is written beside the
+    * snapshot (vocabulary-sized, thin) exactly like an ANALYZE
+    * artifact.
     */
   def indexKeyStats(index: DataFrame): DataFrame = {
     import graft.sources.DfCache
@@ -374,8 +401,13 @@ object JoinSearch {
     // materialization ([[searchTables]] persists its column scores
     // instead).
     conjunctionFromRowKeys(rowKeysShared(postings),
-      stats.getOrElse(postings.groupBy("key").agg(count(lit(1)).as("kdf"))),
-      maps, colCount)
+      anchorsOf(maps, stats.getOrElse(probeKeyStats(postings))), colCount)
+
+  /** Per-key posting counts over a probe output: for every probed key
+    * its corpus df, since the probe keeps all of a key's postings.
+    */
+  private def probeKeyStats(postings: DataFrame): DataFrame =
+    postings.groupBy("key").agg(count(lit(1)).as("kdf"))
 
   /** The conjunction's corpus-side aggregation, exposed so the batch
     * forms can compute it ONCE and share it across query branches
@@ -450,14 +482,15 @@ object JoinSearch {
     * complete; a map_key with NO postings-bearing key gets a null
     * anchor and drops, exactly the old inner join's behavior).
     * Query-side: tiny, broadcast by every consumer.
+    *
+    * This is the plan alone, over a statistic already narrowed to the
+    * query's keys (`queryKeyDf`, broadcast here): [[searchTables]]
+    * builds it inside its `colscores:` fill from its probe output's
+    * key counts; [[anchorsOf]] is the persisted form the other
+    * strategies share.
     */
-  private def anchorsOf(maps: DataFrame, keyDf: DataFrame): DataFrame = {
-    // narrow the statistic to the query's keys FIRST (broadcast
-    // semi-join: the stats table is vocabulary-sized at scale and
-    // must never itself be the broadcast side).
-    val queryKeyDf = keyDf.join(
-      broadcast(maps.select("key").distinct()), Seq("key"), "left_semi")
-    val a = maps
+  private def anchorsPlan(maps: DataFrame, queryKeyDf: DataFrame): DataFrame =
+    maps
       .join(broadcast(queryKeyDf), Seq("key"), "left_outer")
       .groupBy("map_key")
       .agg(collect_list(col("key")).as("req"),
@@ -465,6 +498,18 @@ object JoinSearch {
           struct(col("kdf"), col("key")))).as("a"))
       .where(col("a").isNotNull)
       .select(col("map_key"), col("a.key").as("anchor_key"), col("req"))
+
+  /** [[anchorsPlan]] over any posting-count statistic, session-
+    * persisted (`anchors:`) for the capped, batch, seq-parity and
+    * stage forms.
+    */
+  private def anchorsOf(maps: DataFrame, keyDf: DataFrame): DataFrame = {
+    // narrow the statistic to the query's keys FIRST (broadcast
+    // semi-join: the stats table is vocabulary-sized at scale and
+    // must never itself be the broadcast side).
+    val queryKeyDf = keyDf.join(
+      broadcast(maps.select("key").distinct()), Seq("key"), "left_semi")
+    val a = anchorsPlan(maps, queryKeyDf)
     // session persist (round-18 second pass): the frame is query-
     // table-sized, but its DERIVATION is stage-heavy — the maps
     // distinct, the stats semi-join, the left-outer join and the
@@ -479,9 +524,8 @@ object JoinSearch {
       s"anchors:${a.semanticHash()}")(a)
   }
 
-  private def conjunctionFromRowKeys(rowKeys: DataFrame, keyDf: DataFrame,
-      maps: DataFrame, colCount: Int): DataFrame = {
-    val anchors = anchorsOf(maps, keyDf)
+  private def conjunctionFromRowKeys(rowKeys: DataFrame, anchors: DataFrame,
+      colCount: Int): DataFrame = {
     // per corpus row: matched keys with min-column attribution
     // ([[rowKeysOf]] — the single materialization of the posting
     // lineage, in ONE exchange; round-17 optimization: the old
@@ -543,30 +587,59 @@ object JoinSearch {
     * join_score)` — one row per matched corpus column — are the
     * session persist, keyed `colscores:<index hash>:<maps hash>` (the
     * maps plan encodes the column count, so the pair fixes the
-    * answer). The probe, key-set, anchor and column-score lineage is
-    * built only inside the fill, so a warm search neither builds nor
-    * hashes it: it is the cached maps lookup plus the
+    * answer), and the ONLY entry a fill adds. The persisted frame is
+    * detached from its lineage ([[org.apache.spark.sql.graftx.Bridge
+    * .detach]]): a warm search neither builds, hashes nor re-renders
+    * the fill plan — it is the cached maps lookup plus the
     * topColumns/tableScores/limit tail over the ONE cached partition,
-    * a single exchange-free job. The fill reads the probed key sets
-    * once, so it uses the unpersisted [[rowKeysOf]] rather than the
-    * wide `rowkeys:` frame; its map-side partial aggregation stays
-    * parallel and only the merge of the per-(table, column) counts,
-    * bounded by the number of matched columns, runs in one task. A
-    * live index ([[graft.streaming.IndexStream.loadWithDeltas]]) reads
-    * a new file set after every commit, so its hash — and the key —
-    * moves with it.
+    * a single exchange-free job.
+    *
+    * The fill, on a miss: the probe is one filter on the query's
+    * distinct key list (see [[probe]]), collected once per maps hash
+    * and memoized ([[queryKeys]]); the anchor statistic is the
+    * per-key posting count of that probe output, equal to
+    * [[indexKeyStats]] for every query key, and the anchors are built
+    * in the fill plan ([[anchorsPlan]]), not persisted. It reads the
+    * probed key sets once, so it uses the unpersisted [[rowKeysOf]]
+    * rather than the wide `rowkeys:` frame; its map-side partial
+    * aggregation stays parallel and only the merge of the
+    * per-(table, column) counts, bounded by the number of matched
+    * columns, runs in one task. The
+    * detach runs the fill's shuffle stages inside this call; the
+    * final stage runs with the caller's first action. A live index
+    * ([[graft.streaming.IndexStream.loadWithDeltas]]) reads a new
+    * file set after every commit, so its hash — and the key — moves
+    * with it, and each landed batch costs one `colscores:` entry.
     */
   def searchTables(index: DataFrame, query: DataFrame, cols: Seq[String],
       maxTables: Int = 20): DataFrame = {
     val (m, mapsHash) = preparedMappingsHashed(query, cols)
     val scores = graft.sources.DfCache.getOrPersist(index.sparkSession,
       s"colscores:${index.semanticHash()}:$mapsHash") {
-      columnScores(conjunctionFromRowKeys(rowKeysOf(probe(index, m)),
-        indexKeyStats(index), m, cols.size)).coalesce(1)
+      // coalesce after the detach: a detached frame reports no output
+      // partitioning, and the warm tail needs the one partition known
+      org.apache.spark.sql.graftx.Bridge.detach(
+        columnScoresFill(index, m, mapsHash, cols.size)).coalesce(1)
     }
     tableScores(topColumns(scores, cols.size))
       .orderBy(col("join_score").desc, col("table_id").asc)
       .limit(maxTables)
+  }
+
+  /** The plan [[searchTables]] fills `colscores:` from, before the
+    * detach hides it — for the plan specs.
+    */
+  private[graft] def columnScoresFill(index: DataFrame, query: DataFrame,
+      cols: Seq[String]): DataFrame = {
+    val (m, mapsHash) = preparedMappingsHashed(query, cols)
+    columnScoresFill(index, m, mapsHash, cols.size)
+  }
+
+  private def columnScoresFill(index: DataFrame, maps: DataFrame,
+      mapsHash: Int, colCount: Int): DataFrame = {
+    val probed = index.where(col("key").isin(queryKeys(maps, mapsHash): _*))
+    columnScores(conjunctionFromRowKeys(rowKeysOf(probed),
+      anchorsPlan(maps, probeKeyStats(probed)), colCount))
   }
 
   /** Batched multi-query search: N query tables answered in ONE pass
@@ -736,16 +809,18 @@ object JoinSearch {
     * moves.
     */
   def searchTablesAuto(index: DataFrame, query: DataFrame, cols: Seq[String],
-      maxTables: Int = 20): DataFrame = {
-    val spark = index.sparkSession
+      maxTables: Int = 20): DataFrame =
+    if (fitsBroadcast(query, cols)) searchTables(index, query, cols, maxTables)
+    else searchTablesShuffled(index, query, cols, maxTables)
+
+  /** [[searchTablesAuto]]'s routing gate: the query's mapped size
+    * estimate fits the session's `autoBroadcastJoinThreshold`.
+    */
+  private[graft] def fitsBroadcast(query: DataFrame, cols: Seq[String]): Boolean = {
     val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
+      query.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
     val queryBytes = query.queryExecution.optimizedPlan.stats.sizeInBytes
-    val mappedBytes = queryBytes * (cols.size + 1)
-    if (threshold > 0 && mappedBytes <= threshold)
-      searchTables(index, query, cols, maxTables)
-    else
-      searchTablesShuffled(index, query, cols, maxTables)
+    threshold > 0 && queryBytes * (cols.size + 1) <= threshold
   }
 
   /** Shuffle-degradation form: the windowed pipeline with NO

@@ -21,32 +21,20 @@ import org.apache.spark.storage.StorageLevel
   * depends on residency). Corpus-identity families (`index:`, one entry
   * per data dir) never approach the cap; the probe-derived families
   * (`colscores:` — one per (index, query maps) pair, the default
-  * search's narrow column scores — `rowkeys:`, `anchors:`, `qmaps:`,
-  * `tablebits:`, ... — one entry per distinct probe batch) are exactly
-  * what leaked storage in a long-lived serve session.
+  * search's narrow column scores, the only entry a live-index search
+  * adds per landed batch — `qmaps:`, and the `rowkeys:`, `anchors:`,
+  * `idxstats:`, `tablebits:`, ... frames of the capped, batch, staged
+  * and cross-check strategies — one entry per distinct probe batch)
+  * are exactly what leaked storage in a long-lived serve session.
+  * Scalar memos follow the same per-family cap (`qkeys:`, the default
+  * search's collected query key list, adds one per distinct query).
+  *
+  * A build runs once per key: concurrent callers of one missing key
+  * wait on that key's lock and share the first caller's entry, so a
+  * racing caller neither repeats the build's Spark jobs nor leaves a
+  * second, unreachable CacheManager entry behind.
   */
 object DfCache {
-
-  private val cache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (DataFrame, Seq[String])]]())
-
-  // Scalar memos (driver-side values derived from a durable source,
-  // e.g. the hybrid query-doc id) live beside the frames so the SAME
-  // invalidation gate governs both: a memoized scalar that skipped
-  // [[invalidateDerived]] served a stale id after an in-session
-  // source rewrite (round-17 verdict #4).
-  private val scalars = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (Any, Seq[String])]]())
-
-  // Per-(session, family) recency, access-ordered; guarded by its own
-  // monitor (the TrieMap gives atomic get-or-create, the LinkedHashMap
-  // needs external sync).
-  private val recency = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[
-        String, java.util.LinkedHashMap[String, java.lang.Boolean]]]())
 
   /** Max live entries per key family per session. Far above any
     * bench/verify working set (≤ ~10 per family); what it bounds is
@@ -57,27 +45,86 @@ object DfCache {
 
   private def familyOf(key: String): String = key.takeWhile(_ != ':')
 
-  private def touch(spark: SparkSession,
-      m: scala.collection.concurrent.TrieMap[String, (DataFrame, Seq[String])],
-      key: String): Unit = {
-    val fams = recency.computeIfAbsent(spark,
-      _ => scala.collection.concurrent.TrieMap.empty)
-    val lhm = fams.getOrElseUpdate(familyOf(key),
-      new java.util.LinkedHashMap[String, java.lang.Boolean](16, 0.75f, true))
-    lhm.synchronized {
-      lhm.put(key, java.lang.Boolean.TRUE)
-      while (lhm.size > familyCap) {
-        val it = lhm.keySet.iterator
-        val eldest = it.next(); it.remove()
-        m.remove(eldest).foreach(e => e._1.unpersist(false))
+  /** One kind of session entry, each registered with the upstream
+    * paths it reads and LRU-bounded per key family. `evict` releases
+    * what an entry holds when the cap, an invalidation or a lost build
+    * race drops it.
+    */
+  private final class Store[V](evict: V => Unit) {
+
+    private final class Entries {
+      val byKey = scala.collection.concurrent.TrieMap.empty[String, (V, Seq[String])]
+      // per-family recency, access-ordered; each guarded by its own
+      // monitor (the TrieMap gives atomic get-or-create, the
+      // LinkedHashMap needs external sync).
+      val recency = scala.collection.concurrent.TrieMap.empty[
+        String, java.util.LinkedHashMap[String, java.lang.Boolean]]
+      val buildLocks = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
+    }
+
+    private val sessions = java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, Entries]())
+
+    def getOrBuild(spark: SparkSession, key: String, upstreams: Seq[String])(
+        build: => V): V = {
+      val e = sessions.computeIfAbsent(spark, _ => new Entries)
+      val v = e.byKey.get(key).fold {
+        e.buildLocks.getOrElseUpdate(key, new AnyRef).synchronized {
+          e.byKey.get(key).fold {
+            val built = build
+            // a racing builder can only get here if this key was
+            // evicted while it waited; keep the resident entry.
+            e.byKey.putIfAbsent(key, (built, upstreams))
+              .fold(built) { resident => evict(built); resident._1 }
+          }(_._1)
+        }
+      }(_._1)
+      touch(e, key)
+      v
+    }
+
+    private def touch(e: Entries, key: String): Unit = {
+      val lhm = e.recency.getOrElseUpdate(familyOf(key),
+        new java.util.LinkedHashMap[String, java.lang.Boolean](16, 0.75f, true))
+      lhm.synchronized {
+        lhm.put(key, java.lang.Boolean.TRUE)
+        while (lhm.size > familyCap) {
+          val it = lhm.keySet.iterator
+          val eldest = it.next(); it.remove()
+          drop(e, eldest)
+        }
       }
     }
+
+    private def drop(e: Entries, key: String): Unit = {
+      e.byKey.remove(key).foreach(x => evict(x._1))
+      e.buildLocks.remove(key)
+    }
+
+    private def forget(e: Entries, key: String): Unit = {
+      drop(e, key)
+      e.recency.get(familyOf(key)).foreach(lhm => lhm.synchronized { lhm.remove(key) })
+    }
+
+    def remove(spark: SparkSession, key: String): Unit =
+      Option(sessions.get(spark)).foreach(forget(_, key))
+
+    def removeDerived(spark: SparkSession, ups: Set[String]): Unit =
+      Option(sessions.get(spark)).foreach { e =>
+        e.byKey.foreach { case (k, (_, regs)) =>
+          if (regs.exists(ups.contains)) forget(e, k)
+        }
+      }
   }
 
-  private def untouch(spark: SparkSession, key: String): Unit =
-    Option(recency.get(spark)).foreach(_.get(familyOf(key)).foreach { lhm =>
-      lhm.synchronized { lhm.remove(key); () }
-    })
+  private val frames = new Store[DataFrame](_.unpersist(false))
+
+  // Scalar memos (driver-side values derived from a durable source,
+  // e.g. the hybrid query-doc id) live beside the frames so the SAME
+  // invalidation gate governs both: a memoized scalar that skipped
+  // [[invalidateDerived]] served a stale id after an in-session
+  // source rewrite (round-17 verdict #4).
+  private val scalars = new Store[Any](_ => ())
 
   /** Get the persisted DataFrame for `key`, building + persisting it
     * (MEMORY_AND_DISK — spills instead of recomputing at scale) on
@@ -97,26 +144,19 @@ object DfCache {
     * frame (fixture seams), never gate-invalidated.
     */
   def getOrPersist(spark: SparkSession, key: String,
-      upstreams: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
-    val m = cache.computeIfAbsent(spark,
-      _ => scala.collection.concurrent.TrieMap.empty)
-    val df = m.getOrElseUpdate(key,
-      (build.persist(StorageLevel.MEMORY_AND_DISK), upstreams))._1
-    touch(spark, m, key)
-    df
-  }
+      upstreams: Seq[String] = Nil)(build: => DataFrame): DataFrame =
+    frames.getOrBuild(spark, key, upstreams)(
+      build.persist(StorageLevel.MEMORY_AND_DISK))
 
   /** Session-memoized driver-side VALUE under the same invalidation
-    * gate as the frames: `upstreams` registration works exactly like
-    * [[getOrPersist]]'s, so [[invalidateDerived]] on a source rewrite
-    * drops the memo and the next caller recomputes from the
-    * now-current source.
+    * gate and per-family cap as the frames: `upstreams` registration
+    * works exactly like [[getOrPersist]]'s, so [[invalidateDerived]]
+    * on a source rewrite drops the memo and the next caller
+    * recomputes from the now-current source.
     */
   def memo[T](spark: SparkSession, key: String,
       upstreams: Seq[String] = Nil)(compute: => T): T =
-    scalars.computeIfAbsent(spark,
-        _ => scala.collection.concurrent.TrieMap.empty)
-      .getOrElseUpdate(key, (compute, upstreams))._1.asInstanceOf[T]
+    scalars.getOrBuild(spark, key, upstreams)(compute).asInstanceOf[T]
 
   /** Drop (and unpersist) one entry — for the rare in-session source
     * rewrite (a test fixture re-crawl): a pinned lineage over
@@ -124,11 +164,8 @@ object DfCache {
     * recompute. No-op when absent.
     */
   def invalidate(spark: SparkSession, key: String): Unit = {
-    Option(cache.get(spark)).foreach { m =>
-      m.remove(key).foreach(e => e._1.unpersist(false))
-    }
-    Option(scalars.get(spark)).foreach(_.remove(key))
-    untouch(spark, key)
+    frames.remove(spark, key)
+    scalars.remove(spark, key)
   }
 
   /** Drop every session entry registered against any of
@@ -145,17 +182,7 @@ object DfCache {
     */
   def invalidateDerived(spark: SparkSession, upstreamPaths: Seq[String]): Unit = {
     val ups = upstreamPaths.toSet
-    Option(cache.get(spark)).foreach { m =>
-      m.foreach { case (k, (df, regs)) =>
-        if (regs.exists(ups.contains)) {
-          m.remove(k); df.unpersist(false); untouch(spark, k)
-        }
-      }
-    }
-    Option(scalars.get(spark)).foreach { s =>
-      s.foreach { case (k, (_, regs)) =>
-        if (regs.exists(ups.contains)) s.remove(k)
-      }
-    }
+    frames.removeDerived(spark, ups)
+    scalars.removeDerived(spark, ups)
   }
 }

@@ -9,7 +9,9 @@ import graft.sources.DfCache
   * bypassing invalidateDerived served a stale query-doc id after an
   * in-session source rewrite), and per-family growth is LRU-bounded
   * (#5 — every distinct probe batch minted a semantically-keyed
-  * persist that lived for the session's lifetime).
+  * persist that lived for the session's lifetime) — for memos too,
+  * since the default search memoizes one key list per query. Also
+  * pins that one key builds once under concurrent first touches.
   */
 class DfCacheSpec extends SparkTestBase {
 
@@ -73,5 +75,51 @@ class DfCacheSpec extends SparkTestBase {
     }
     other()
     assert(builds.get() == 1, "unrelated family evicted by another's growth")
+  }
+
+  test("a memo family holds at most familyCap entries, LRU evicted") {
+    val builds = new AtomicInteger(0)
+    def get(i: Int) = DfCache.memo(spark, s"dfcspec-mlru:$i") {
+      builds.incrementAndGet(); i
+    }
+    val cap = DfCache.familyCap
+    (0 to cap).foreach(get)
+    assert(builds.get() == cap + 1)
+    // the newest cap keys are resident: touching them builds nothing
+    (cap to 1 by -1).foreach(i => assert(get(i) == i))
+    assert(builds.get() == cap + 1, "a memo within the cap was rebuilt")
+    // key 0, the least recent when key `cap` arrived, was evicted
+    assert(get(0) == 0)
+    assert(builds.get() == cap + 2, "the family kept more than familyCap memos")
+  }
+
+  test("concurrent first touches of one key build and persist it once") {
+    val builds = new AtomicInteger(0)
+    val key = s"dfcspec-race:${System.nanoTime()}"
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val frames = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    val threads = (0 until 2).map { _ =>
+      new Thread(() => {
+        start.await()
+        frames.add(DfCache.getOrPersist(spark, key) {
+          builds.incrementAndGet()
+          // hold the build open so the other caller arrives mid-build
+          Thread.sleep(500)
+          spark.range(3).toDF("v")
+        })
+        ()
+      })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join(60000))
+    assert(frames.size == 2, "a caller never returned")
+    assert(builds.get() == 1, s"the build ran ${builds.get()} times")
+    val it = frames.iterator
+    assert(it.next() eq it.next(), "the callers got different frames")
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    assert(frames.peek().storageLevel != none)
+    DfCache.invalidate(spark, key)
+    assert(frames.peek().storageLevel == none,
+      "a CacheManager entry outlived the key")
   }
 }

@@ -196,25 +196,25 @@ class JoinSearchSpec extends SparkTestBase {
 
   test("auto dispatch routes by query size against the broadcast threshold") {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
-    // the hinted route's broadcasts sit inside the `colscores:` fill,
-    // so descend into cached fills (the IndexStreamSpec convention).
     def joinsIn(p: org.apache.spark.sql.execution.SparkPlan): Int = p match {
       case _: BroadcastHashJoinExec | _: BroadcastNestedLoopJoinExec =>
         1 + p.children.map(joinsIn).sum
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
         joinsIn(a.inputPlan)
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        joinsIn(s.relation.cachedPlan)
       case other => other.children.map(joinsIn).sum
     }
     def broadcastJoins(df: org.apache.spark.sql.DataFrame): Int =
       joinsIn(df.queryExecution.sparkPlan)
     // under the default threshold the tiny query takes the hinted
-    // plan — broadcast joins present.
-    val hinted = JoinSearch.searchTablesAuto(index, query, cols)
-    assert(broadcastJoins(hinted) > 0,
-      s"small query did not route to the hinted form:\n${hinted.queryExecution.sparkPlan}")
-    val base = hinted.as[(Int, Long)].collect().toSeq
+    // route. The decision is asserted directly: the hinted plan's
+    // broadcasts ran inside its `colscores:` fill, which the cached
+    // frame no longer carries as a plan.
+    assert(JoinSearch.fitsBroadcast(query, cols),
+      "small query did not route to the hinted form")
+    val base = JoinSearch.searchTablesAuto(index, query, cols)
+      .as[(Int, Long)].collect().toSeq
+    assert(base == JoinSearch.searchTables(index, query, cols)
+      .as[(Int, Long)].collect().toSeq)
 
     // with broadcasting disabled (the stand-in for an over-threshold
     // query: the gate compares against the SAME conf), the dispatch
@@ -225,6 +225,7 @@ class JoinSearchSpec extends SparkTestBase {
     val prev = spark.conf.get(key)
     spark.conf.set(key, "0")
     try {
+      assert(!JoinSearch.fitsBroadcast(query, cols))
       val degraded = JoinSearch.searchTablesAuto(index, query, cols)
       assert(broadcastJoins(degraded) == 0,
         s"dispatch still forces broadcasts with the threshold off:\n${degraded.queryExecution.sparkPlan}")

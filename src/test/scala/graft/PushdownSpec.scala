@@ -78,7 +78,9 @@ class PushdownSpec extends SparkTestBase {
 
   test("anchored search joins are all broadcast — the index side never shuffles for a join") {
     val idx = graft.sources.IndexBuilder.build(spark, sf0001)
-    val df = graft.operators.JoinSearch.searchTables(
+    // the joins run in the search's `colscores:` fill, whose cached
+    // frame is detached from this plan: check the fill plan itself
+    val df = graft.operators.JoinSearch.columnScoresFill(
       idx, Queries.customerQuery(spark, sf0001), Queries.customerCols)
     val plan = df.queryExecution.sparkPlan.toString
     assert(!plan.contains("SortMergeJoin"), "unexpected SortMergeJoin in:\n" + plan)
