@@ -38,17 +38,15 @@ object Plans {
           "ranked output is a TakeOrdered, never a global sort " +
           "materialization.",
         JoinSearch.searchTables(idx, custQ, Queries.customerCols)),
-      ("searchTablesPartitionPruned (file-skipping lake scan)",
-        "The sketch verdict is a literal table_id IN (...) predicate: " +
-          "look for PartitionFilters on the partitioned scan — pruned " +
+      ("searchTables with Narrow.Sketch (file-skipping lake scan)",
+        "The column-score fill over the partitioned snapshot: the " +
+          "sketch verdict is a literal table_id IN (...) predicate — " +
+          "look for PartitionFilters on the partitioned scan; pruned " +
           "tables' files are never listed into the plan.",
-        {
-          val part = IndexBuilder.loadOrSnapshotPartitioned(spark, sfDir)
-          val sketch = IndexBuilder.loadOrBuildTableSketch(spark, sfDir)
-          val stats = IndexBuilder.loadOrBuildKeyStats(spark, sfDir)
-          JoinSearch.searchTablesPartitionPruned(
-            part, sketch, stats, custQ, Queries.customerCols)
-        }),
+        JoinSearch.columnScoresFill(
+          IndexBuilder.loadOrSnapshotPartitioned(spark, sfDir), custQ,
+          Queries.customerCols, JoinSearch.Narrow.Sketch(
+            IndexBuilder.loadOrBuildTableSketch(spark, sfDir)))),
       ("heavyHitters (certified sketch-then-verify)",
         "The FIRST corpus-sized exchange is bucket-keyed (<= B partial " +
           "rows per task); the only term-keyed aggregation sees " +

@@ -533,7 +533,8 @@ SELECT key, count(*) AS kdf FROM live GROUP BY key ORDER BY key"""))),
     // is scale-relative by nature; production would set it as a
     // corpus fraction.)
     Q("search_orders_dfcap",
-      (s, dir) => JoinSearch.searchTablesCapped(index(s, dir), ordersQuery(s, dir), ordersCols, 10000L),
+      (s, dir) => JoinSearch.searchTables(index(s, dir), ordersQuery(s, dir), ordersCols,
+        narrow = JoinSearch.Narrow.DfCap(10000L)),
       Some(SearchOracle.tableScoresCapped(ordersSpec, 10000L))),
     // The FRACTION default (round-14 verdict #4): cap = 5 % of total
     // postings, derived from the key-stats the guard already reads —
@@ -542,7 +543,8 @@ SELECT key, count(*) AS kdf FROM live GROUP BY key ORDER BY key"""))),
     // 'p' at 2.8 % and the priorities at ~1.7 %; the ratios — and so
     // the behavior — are identical at sf0.1 and at 100 TB).
     Q("search_orders_dfcap_frac",
-      (s, dir) => JoinSearch.searchTablesCapped(index(s, dir), ordersQuery(s, dir), ordersCols),
+      (s, dir) => JoinSearch.searchTables(index(s, dir), ordersQuery(s, dir), ordersCols,
+        narrow = JoinSearch.Narrow.DfCapFraction(JoinSearch.DefaultCapFractionBp)),
       Some(SearchOracle.tableScoresCappedFraction(
         ordersSpec, JoinSearch.DefaultCapFractionBp))),
     // Sketch pre-filtered search: the table-pruning pre-filter is
@@ -554,25 +556,25 @@ SELECT key, count(*) AS kdf FROM live GROUP BY key ORDER BY key"""))),
     // predicate, so pruned tables' FILES are skipped, not just their
     // postings (PrunedSearchSpec pins PartitionFilters + files-read).
     Q("search_pruned_tables",
-      (s, dir) => JoinSearch.searchTablesPartitionPruned(
+      (s, dir) => JoinSearch.searchTables(
         IndexBuilder.loadOrSnapshotPartitioned(s, dir),
-        IndexBuilder.cachedTableSketch(s, dir),
-        IndexBuilder.cachedKeyStats(s, dir),
-        customerQuery(s, dir), customerCols),
+        customerQuery(s, dir), customerCols,
+        narrow = JoinSearch.Narrow.Sketch(IndexBuilder.cachedTableSketch(s, dir))),
       Some(SearchOracle.tableScores(customerSpec))),
     Q("search_part_pruned",
-      (s, dir) => JoinSearch.searchTablesPartitionPruned(
+      (s, dir) => JoinSearch.searchTables(
         IndexBuilder.loadOrSnapshotPartitioned(s, dir),
-        IndexBuilder.cachedTableSketch(s, dir),
-        IndexBuilder.cachedKeyStats(s, dir),
-        partQuery(s, dir), partCols),
+        partQuery(s, dir), partCols,
+        narrow = JoinSearch.Narrow.Sketch(IndexBuilder.cachedTableSketch(s, dir))),
       Some(SearchOracle.tableScores(partSpec))),
-    // the merged-snapshot semi-join form stays registered as the
-    // cross-check twin (same oracle): the prune that shrinks postings
-    // when the index is one dataset and partition routing is not
-    // available (e.g. the session-cached in-memory index).
+    // the same Sketch narrowing on the merged index layout (same
+    // oracle): there the table_id IN list is a plain filter that
+    // shrinks the probed postings, since the session-cached index has
+    // no table_id partitions to skip. The name predates the literal
+    // list, which replaced a broadcast semi-join on the allowed set.
     Q("search_pruned_semijoin",
-      (s, dir) => JoinSearch.searchTablesPruned(index(s, dir), customerQuery(s, dir), customerCols),
+      (s, dir) => JoinSearch.searchTables(index(s, dir), customerQuery(s, dir), customerCols,
+        narrow = JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(index(s, dir)))),
       Some(SearchOracle.tableScores(customerSpec))),
     // batching + file skipping composed: three queries, one shared
     // probe, one unioned partition predicate. Oracle = the queries

@@ -175,7 +175,8 @@ object Scale {
     val plain = (1 to reps).map(_ =>
       timed { JoinSearch.searchTables(idx, q, cols).count() }).min
     val pruned = (1 to reps).map(_ =>
-      timed { JoinSearch.searchTablesPruned(idx, q, cols).count() }).min
+      timed { JoinSearch.searchTables(idx, q, cols,
+        narrow = JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(idx))).count() }).min
 
     // the FILE rung: the same lake as a table_id-partitioned parquet
     // dataset (hive layout, one file per table — the per-table
@@ -188,18 +189,16 @@ object Scale {
       idx.repartition(col("table_id"))
         .write.mode("overwrite").partitionBy("table_id").parquet(lakePath)
     val lake = spark.read.parquet(lakePath)
-    val sketch = JoinSearch.tableKeySketchCached(idx)
-    val stats = JoinSearch.indexKeyStats(idx)
+    val sketch = JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(idx))
     val lakePlain = (1 to reps).map(_ =>
       timed { JoinSearch.searchTables(lake, q, cols).count() }).min
     val lakePart = (1 to reps).map(_ =>
       timed {
-        JoinSearch.searchTablesPartitionPruned(lake, sketch, stats, q, cols)
-          .count()
+        JoinSearch.searchTables(lake, q, cols, narrow = sketch).count()
       }).min
-    // file accounting straight off the pruned plan's scan node.
-    val prunedDf = JoinSearch.searchTablesPartitionPruned(
-      lake, sketch, stats, q, cols)
+    // file accounting straight off the scan node of the pruned
+    // search's column-score fill (the cached entry is detached from it).
+    val prunedDf = JoinSearch.columnScoresFill(lake, q, cols, sketch)
     val scan = prunedDf.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
         if f.relation.location.rootPaths.exists(_.toString.contains("lake-")) => f
@@ -291,7 +290,9 @@ object Scale {
       "search_part_3attr" -> (d =>
         JoinSearch.searchTables(IndexBuilder.cached(spark, d), partQ, Queries.partCols)),
       "search_customer_pruned" -> (d =>
-        JoinSearch.searchTablesPruned(IndexBuilder.cached(spark, d), custQ, Queries.customerCols)),
+        JoinSearch.searchTables(IndexBuilder.cached(spark, d), custQ, Queries.customerCols,
+          narrow = JoinSearch.Narrow.Sketch(
+            JoinSearch.tableKeySketchCached(IndexBuilder.cached(spark, d))))),
       // the batched service: both queries above in ONE index pass —
       // its ratio should track the single searches', with the probe
       // paid once.

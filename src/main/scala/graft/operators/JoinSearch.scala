@@ -28,6 +28,15 @@ import graft.functions.Tokenize
   *    re-expressed as plain whole-partition counts;
   *  - ranking/limits always carry total-order tie-breakers.
   *
+  * The serving searches share one anchored path: [[searchTables]]
+  * takes a [[Narrow]] (the whole index, the hot-key guard with an
+  * absolute or corpus-fraction cap, or the sketch pre-filter), and it,
+  * [[searchTablesSeqParity]] and [[searchColumns]] are tails over one
+  * session-cached column-score frame per (narrowed index, query), the
+  * `colscores:` family. The other `searchTables*` forms are the
+  * cross-check strategies the property spec compares against, and the
+  * batch pair.
+  *
   * Scale posture: the query table is tiny next to the index, so
   * mappings are broadcast (J1 never shuffles the postings side twice);
   * the probe is a semi-join (map-side with broadcast); the two
@@ -98,7 +107,7 @@ object JoinSearch {
   /** J5: one distributed semi-join replaces the reference's per-column
     * `WHERE tokenized IN (...)` literal-list SQL round-trips
     * (`handlers.py:62-71`, `Par_Search.py:196-200`). The staged,
-    * capped, seq-parity and cross-check strategies probe this way.
+    * batch and cross-check strategies probe this way.
     * [[searchTables]] instead filters on the query's distinct key list
     * — the reference's IN list, once for all columns: the same
     * postings, but the key set is a plan literal rather than a
@@ -117,7 +126,7 @@ object JoinSearch {
     * the SAME few query tables across ~30 search invocations per
     * session. In the anchored strategies those branches now sit
     * inside cached fills ([[searchTables]]' `colscores:`, the
-    * `rowkeys:` and `anchors:` frames of the other forms), so a warm
+    * `rowkeys:` and `anchors:` frames of the batch forms), so a warm
     * [[searchTables]] reads the maps frame only for its semantic
     * hash, half of the `colscores:` key; a `colscores:` miss reads
     * its key list once per maps hash ([[queryKeys]]). The frame is
@@ -239,42 +248,6 @@ object JoinSearch {
     index.join(broadcast(allowed), Seq("key"), "left_semi")
   }
 
-  /** [[searchTables]] with the hot-key guard in the probe. */
-  def searchTablesCapped(index: DataFrame, query: DataFrame, cols: Seq[String],
-      maxDf: Long, maxTables: Int = 20): DataFrame = {
-    val m = preparedMappings(query, cols)
-    val top = topColumns(
-      columnScores(conjunctionAnchored(probeCapped(index, m, maxDf), m, cols.size,
-        Some(indexKeyStats(index)))),
-      cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
-  }
-
-  /** [[searchTablesCapped]] with the FRACTION default — the form a
-    * deployment should reach for (the absolute overload stays for
-    * callers that know their corpus).
-    */
-  def searchTablesCapped(index: DataFrame, query: DataFrame,
-      cols: Seq[String]): DataFrame =
-    searchTablesCappedFraction(index, query, cols)
-
-  def searchTablesCappedFraction(index: DataFrame, query: DataFrame,
-      cols: Seq[String], fracBp: Long = DefaultCapFractionBp,
-      maxTables: Int = 20): DataFrame = {
-    val m = preparedMappings(query, cols)
-    val stats = indexKeyStats(index)
-    val top = topColumns(
-      columnScores(conjunctionAnchored(
-        probeCappedFraction(index, m, fracBp, stats), m, cols.size,
-        Some(stats))),
-      cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
-  }
-
   /** P6+W1: one posting per (table,row,key), then keep only corpus
     * rows hit by >= colCount distinct query keys
     * (`Par_Search.py:244-250`).
@@ -364,9 +337,9 @@ object JoinSearch {
     */
   /** Per-key posting counts over an index, session-cached: the
     * anchor-selection statistic as a BUILD-TIME artifact rather than
-    * a per-query pass, for the capped, seq-parity, pruned, column and
-    * batch forms (the hot-key guard needs every key's df, not only
-    * the probed ones). Without it those searches scan the index twice
+    * a per-query pass, for the hot-key guard ([[Narrow.DfCap]], which
+    * needs every key's df, not only the probed ones) and the batch
+    * forms. Without it those searches scan the index twice
     * (once under the anchor-statistic lineage, once under the row key
     * sets); with it, once — the stats scan amortizes over every query
     * in the session. [[searchTables]] does not read it: it counts its
@@ -396,10 +369,9 @@ object JoinSearch {
     // corpus df per matched key: the supplied build-time statistic,
     // or (self-contained fallback) one pass over the probe output.
     // The row key sets come from the shared session persist
-    // ([[rowKeysShared]], round-18 second pass) — the capped and
-    // seq-parity strategies over the same probe consume one
-    // materialization ([[searchTables]] persists its column scores
-    // instead).
+    // ([[rowKeysShared]], round-18 second pass), the one
+    // materialization the stage queries share ([[searchTables]]
+    // persists its column scores instead).
     conjunctionFromRowKeys(rowKeysShared(postings),
       anchorsOf(maps, stats.getOrElse(probeKeyStats(postings))), colCount)
 
@@ -432,8 +404,8 @@ object JoinSearch {
 
   /** [[rowKeysOf]] as a session persist, semantically keyed on the
     * probed lineage (round-18, second pass): the per-(table,row) key
-    * set is the one corpus-side materialization that the capped and
-    * seq-parity anchored conjunctions, the windowed/row-wise/cell-wise
+    * set is the one corpus-side materialization that
+    * [[conjunctionAnchored]], the windowed/row-wise/cell-wise
     * cross-check strategies, the batch forms and the five registered
     * stage queries (W1/J1/W2/A1/W3) derive from the same probe — each
     * re-ran the probe semi-join + the aggregation per invocation, a
@@ -442,12 +414,12 @@ object JoinSearch {
     * forms' `batch-rowkeys` arrangement generalized to a single
     * `rowkeys:` family (same LRU bound,
     * [[graft.sources.DfCache.familyCap]]). Two routes deliberately
-    * stay off it: the default [[searchTables]] reads the key sets once
-    * per `colscores:` fill, so it aggregates them unpersisted and
-    * persists the far narrower column scores instead; and the
-    * huge-query degradation route ([[searchTablesShuffled]]) keeps its
-    * unpersisted [[reduce]]: a one-shot giant probe should not be
-    * materialized to executor storage.
+    * stay off it: [[searchTables]] (every narrowing) reads the key
+    * sets once per `colscores:` fill, so it aggregates them
+    * unpersisted and persists the far narrower column scores instead;
+    * and the huge-query degradation route ([[searchTablesShuffled]])
+    * keeps its unpersisted [[reduce]]: a one-shot giant probe should
+    * not be materialized to executor storage.
     */
   private[graft] def rowKeysShared(postings: DataFrame): DataFrame =
     graft.sources.DfCache.getOrPersist(postings.sparkSession,
@@ -486,8 +458,8 @@ object JoinSearch {
     * This is the plan alone, over a statistic already narrowed to the
     * query's keys (`queryKeyDf`, broadcast here): [[searchTables]]
     * builds it inside its `colscores:` fill from its probe output's
-    * key counts; [[anchorsOf]] is the persisted form the other
-    * strategies share.
+    * key counts; [[anchorsOf]] is the persisted form
+    * [[conjunctionAnchored]] and the batch forms share.
     */
   private def anchorsPlan(maps: DataFrame, queryKeyDf: DataFrame): DataFrame =
     maps
@@ -500,8 +472,8 @@ object JoinSearch {
       .select(col("map_key"), col("a.key").as("anchor_key"), col("req"))
 
   /** [[anchorsPlan]] over any posting-count statistic, session-
-    * persisted (`anchors:`) for the capped, batch, seq-parity and
-    * stage forms.
+    * persisted (`anchors:`) for [[conjunctionAnchored]] and the batch
+    * forms.
     */
   private def anchorsOf(maps: DataFrame, keyDf: DataFrame): DataFrame = {
     // narrow the statistic to the query's keys FIRST (broadcast
@@ -578,28 +550,86 @@ object JoinSearch {
     topCols.groupBy("table_id")
       .agg(sum("join_score").cast("long").as("join_score"))
 
+  /** Which part of the index a search reads: the postings its
+    * [[searchTables]] fill probes. Every case keeps each posting of a
+    * table and key it admits, so the anchored conjunction over the
+    * narrowed index is the conjunction over the whole index restricted
+    * to what the narrowing admits.
+    */
+  sealed trait Narrow
+
+  object Narrow {
+
+    /** The whole index. */
+    case object All extends Narrow
+
+    /** Hot-key guard with an absolute cap: [[probeCapped]] over the
+      * index's own [[indexKeyStats]], which for a live index counts
+      * the base and every landed delta.
+      */
+    final case class DfCap(maxDf: Long) extends Narrow
+
+    /** Hot-key guard with a corpus-fraction cap:
+      * [[probeCappedFraction]] over [[indexKeyStats]];
+      * [[DefaultCapFractionBp]] is the form a deployment should reach
+      * for, since an absolute cap is scale-relative.
+      */
+    final case class DfCapFraction(fracBp: Long) extends Narrow
+
+    /** Sketch pre-filter: the index restricted to `table_id IN`
+      * [[prunedTableIds]], the tables the sketch cannot rule out
+      * ([[prunedTables]] is conservative, so answers equal the
+      * unnarrowed search's). On the `table_id`-partitioned snapshot
+      * ([[graft.sources.IndexBuilder.loadOrSnapshotPartitioned]]) the
+      * literal list becomes the scan's PartitionFilters and pruned
+      * tables' files are never listed into the plan; on the merged
+      * index it is a plain filter. `sketch` must describe the postings
+      * the index serves ([[graft.streaming.IndexStream
+      * .tableSketchWithDeltas]] for a live index): a stale sketch
+      * drops tables that now match.
+      */
+    final case class Sketch(sketch: DataFrame) extends Narrow
+  }
+
+  private def narrowed(index: DataFrame, maps: DataFrame, colCount: Int,
+      narrow: Narrow): DataFrame = narrow match {
+    case Narrow.All => index
+    case Narrow.DfCap(maxDf) => probeCapped(index, maps, maxDf)
+    case Narrow.DfCapFraction(fracBp) =>
+      probeCappedFraction(index, maps, fracBp, indexKeyStats(index))
+    case Narrow.Sketch(sketch) =>
+      index.where(col("table_id").isin(prunedTableIds(sketch, maps, colCount): _*))
+  }
+
   /** End-to-end: ranked table scores (O2/O3, `Par_Search.py:324-330`).
     * Default physical strategy is [[conjunctionAnchored]]; the staged
     * windowed pipeline remains available as [[searchTablesWindowed]]
-    * and via the per-stage operators.
+    * and via the per-stage operators. `narrow` restricts the index
+    * first: the hot-key guard or the sketch pre-filter ([[Narrow]]).
     *
     * Persist boundary: the column scores `(table_id, column_id,
     * join_score)` — one row per matched corpus column — are the
-    * session persist, keyed `colscores:<index hash>:<maps hash>` (the
-    * maps plan encodes the column count, so the pair fixes the
-    * answer), and the ONLY entry a fill adds. The persisted frame is
+    * session persist, keyed `colscores:<narrowed index hash>:<maps
+    * hash>` (the narrowed plan carries the narrowing's own inputs and
+    * the maps plan encodes the column count, so the pair fixes the
+    * answer), and the ONLY entry a fill adds. [[searchTablesSeqParity]]
+    * and [[searchColumns]] read the same entry. The persisted frame is
     * detached from its lineage ([[org.apache.spark.sql.graftx.Bridge
     * .detach]]): a warm search neither builds, hashes nor re-renders
     * the fill plan — it is the cached maps lookup plus the
     * topColumns/tableScores/limit tail over the ONE cached partition,
-    * a single exchange-free job.
+    * a single exchange-free job. A [[Narrow.Sketch]] search adds the
+    * collect of its session-cached sketch verdict, one more job.
     *
     * The fill, on a miss: the probe is one filter on the query's
     * distinct key list (see [[probe]]), collected once per maps hash
     * and memoized ([[queryKeys]]); the anchor statistic is the
     * per-key posting count of that probe output, equal to
     * [[indexKeyStats]] for every query key, and the anchors are built
-    * in the fill plan ([[anchorsPlan]]), not persisted. It reads the
+    * in the fill plan ([[anchorsPlan]]), not persisted. Over a
+    * narrowed index the counts are the narrowed ones; that only moves
+    * which key joins first, since every conjunction row contains every
+    * key of its query row. It reads the
     * probed key sets once, so it uses the unpersisted [[rowKeysOf]]
     * rather than the wide `rowkeys:` frame; its map-side partial
     * aggregation stays parallel and only the merge of the
@@ -612,27 +642,43 @@ object JoinSearch {
     * with it, and each landed batch costs one `colscores:` entry.
     */
   def searchTables(index: DataFrame, query: DataFrame, cols: Seq[String],
-      maxTables: Int = 20): DataFrame = {
+      maxTables: Int = 20, narrow: Narrow = Narrow.All): DataFrame =
+    tableScores(topColumns(columnScoresCached(index, query, cols, narrow), cols.size))
+      .orderBy(col("join_score").desc, col("table_id").asc)
+      .limit(maxTables)
+
+  /** The `colscores:` entry of (narrowed index, query): see
+    * [[searchTables]].
+    */
+  private def columnScoresCached(index: DataFrame, query: DataFrame,
+      cols: Seq[String], narrow: Narrow): DataFrame = {
     val (m, mapsHash) = preparedMappingsHashed(query, cols)
-    val scores = graft.sources.DfCache.getOrPersist(index.sparkSession,
-      s"colscores:${index.semanticHash()}:$mapsHash") {
+    val idx = narrowed(index, m, cols.size, narrow)
+    fillPlans.value(() => columnScoresFill(idx, m, mapsHash, cols.size))
+    graft.sources.DfCache.getOrPersist(index.sparkSession,
+      s"colscores:${idx.semanticHash()}:$mapsHash") {
       // coalesce after the detach: a detached frame reports no output
       // partitioning, and the warm tail needs the one partition known
       org.apache.spark.sql.graftx.Bridge.detach(
-        columnScoresFill(index, m, mapsHash, cols.size)).coalesce(1)
+        columnScoresFill(idx, m, mapsHash, cols.size)).coalesce(1)
     }
-    tableScores(topColumns(scores, cols.size))
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
   }
+
+  /** Handed, on every [[columnScoresCached]] call, hit or miss, a
+    * builder of the fill plan behind the entry, so a plan audit over
+    * a search sees what the detach hides (`GenerateAuditSpec`). A
+    * no-op unless an audit binds it.
+    */
+  private[graft] val fillPlans =
+    new scala.util.DynamicVariable[(() => DataFrame) => Unit](_ => ())
 
   /** The plan [[searchTables]] fills `colscores:` from, before the
     * detach hides it — for the plan specs.
     */
   private[graft] def columnScoresFill(index: DataFrame, query: DataFrame,
-      cols: Seq[String]): DataFrame = {
+      cols: Seq[String], narrow: Narrow = Narrow.All): DataFrame = {
     val (m, mapsHash) = preparedMappingsHashed(query, cols)
-    columnScoresFill(index, m, mapsHash, cols.size)
+    columnScoresFill(narrowed(index, m, cols.size, narrow), m, mapsHash, cols.size)
   }
 
   private def columnScoresFill(index: DataFrame, maps: DataFrame,
@@ -763,18 +809,13 @@ object JoinSearch {
     * columns, so for N > 2 this genuinely diverges from
     * [[searchTables]] (A2∘W3) and the divergence is what the parity
     * oracle pins. For N = 2 the two modes coincide by construction.
+    * The column scores are [[searchTables]]' `colscores:` entry.
     */
   def searchTablesSeqParity(index: DataFrame, query: DataFrame,
-      cols: Seq[String], maxTables: Int = 30): DataFrame = {
-    val m = preparedMappings(query, cols)
-    val top = topColumns(
-      columnScores(conjunctionAnchored(probe(index, m), m, cols.size,
-        Some(indexKeyStats(index)))),
-      2)
-    tableScores(top)
+      cols: Seq[String], maxTables: Int = 30): DataFrame =
+    tableScores(topColumns(columnScoresCached(index, query, cols, Narrow.All), 2))
       .orderBy(col("join_score").desc, col("table_id").asc)
       .limit(maxTables)
-  }
 
   /** The original staged windowed pipeline end-to-end (W1 window ->
     * broadcast J1 -> W2 window) — result-identical to [[searchTables]],
@@ -850,17 +891,14 @@ object JoinSearch {
       .limit(maxTables)
   }
 
-  /** End-to-end: ranked column scores (`Par_Search.py:329`). */
+  /** End-to-end: ranked column scores (`Par_Search.py:329`), from
+    * [[searchTables]]' `colscores:` entry.
+    */
   def searchColumns(index: DataFrame, query: DataFrame, cols: Seq[String],
-      maxTables: Int = 20): DataFrame = {
-    val m = preparedMappings(query, cols)
-    val top = topColumns(
-      columnScores(conjunctionAnchored(probe(index, m), m, cols.size,
-        Some(indexKeyStats(index)))),
-      cols.size)
-    top.orderBy(col("join_score").desc, col("table_id").asc, col("column_id").asc)
+      maxTables: Int = 20): DataFrame =
+    topColumns(columnScoresCached(index, query, cols, Narrow.All), cols.size)
+      .orderBy(col("join_score").desc, col("table_id").asc, col("column_id").asc)
       .limit(2 * maxTables)
-  }
 
   /** Row-wise strategy (the reference's per-query-row traversal,
     * `Seq_Search.py:143-166`, re-expressed relationally): no W1
@@ -1034,9 +1072,9 @@ object JoinSearch {
     *    nothing.
     * Sketch hits are one-sided (hash-bucket membership has false
     * positives, never false negatives), so both checks only ever
-    * over-keep: [[searchTablesPruned]] is exactly [[searchTables]]
-    * on the survivors. Both sides of every join here are
-    * sketch/query-sized — nothing touches the postings.
+    * over-keep: a [[Narrow.Sketch]] search is exactly the unnarrowed
+    * [[searchTables]] on the survivors. Both sides of every join here
+    * are sketch/query-sized — nothing touches the postings.
     */
   def prunedTables(sketch: DataFrame, maps: DataFrame, colCount: Int): DataFrame =
     // the single-query verdict IS the grouped evaluation at batch
@@ -1120,34 +1158,8 @@ object JoinSearch {
       s"prunedverdict:${verdict.semanticHash()}")(verdict)
   }
 
-  /** [[searchTables]] behind the sketch pre-filter: identical ranked
-    * output (the prune is provably conservative — see
-    * [[prunedTables]]), but the posting-level pipeline only ever sees
-    * postings of tables that passed the sketch. In this repo's merged
-    * key-clustered snapshot that shrinks the probe output feeding the
-    * (table,row) shuffle; on a real lake — where each table is its
-    * own parquet dataset and the "index" federates them — the pruned
-    * tables' files are never read at all, which is the difference
-    * between touching 100 TB and touching the handful of tables that
-    * share the query's vocabulary.
-    */
-  def searchTablesPruned(index: DataFrame, query: DataFrame, cols: Seq[String],
-      maxTables: Int = 20): DataFrame = {
-    val m = preparedMappings(query, cols)
-    val allowed = prunedTables(tableKeySketchCached(index), m, cols.size)
-    val probed = probe(index, m)
-      .join(broadcast(allowed), Seq("table_id"), "left_semi")
-    val top = topColumns(
-      columnScores(conjunctionAnchored(probed, m, cols.size,
-        Some(indexKeyStats(index)))),
-      cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
-  }
-
   /** The sketch's allowed-table set as literal table ids — the
-    * routing step of [[searchTablesPartitionPruned]], exposed for the
+    * routing step of a [[Narrow.Sketch]] search, exposed for the
     * plan/metrics specs. The `.collect()` here is deliberate and is
     * NOT a data collect: the sketch verdict is metadata-sized
     * (bounded by the lake's table count, like the catalog listing
@@ -1160,39 +1172,9 @@ object JoinSearch {
     prunedTables(sketch, maps, colCount)
       .collect().map(_.getAs[Number]("table_id").intValue).toSeq.sorted
 
-  /** [[searchTablesPruned]] over a `table_id`-PARTITIONED snapshot
-    * ([[graft.sources.IndexBuilder.writePartitionedSnapshot]]) — the
-    * form where pruning skips FILES, not just postings. The sketch's
-    * allowed-table set (evaluated against the durable sketch artifact
-    * in milliseconds, touching no postings) becomes a literal
-    * `table_id IN (...)` predicate on the partitioned scan, which
-    * Catalyst turns into PartitionFilters: pruned tables' files are
-    * never listed into the plan, let alone read
-    * (`PrunedSearchSpec` pins the plan shape and the files-read
-    * count). Identical ranked output to [[searchTables]] — the prune
-    * is provably conservative ([[prunedTables]]) and the pipeline
-    * below the scan is the anchored default, fed by the durable
-    * key-stats artifact (`stats`) since the merged session index
-    * never materializes here.
-    */
-  def searchTablesPartitionPruned(partIndex: DataFrame, sketch: DataFrame,
-      stats: DataFrame, query: DataFrame, cols: Seq[String],
-      maxTables: Int = 20): DataFrame = {
-    val m = preparedMappings(query, cols)
-    val allowed = prunedTableIds(sketch, m, cols.size)
-    val probed = probe(
-      partIndex.where(col("table_id").isin(allowed: _*)), m)
-    val top = topColumns(
-      columnScores(conjunctionAnchored(probed, m, cols.size, Some(stats))),
-      cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
-  }
-
   /** The two flagship accelerations composed: [[searchTablesBatch]]'s
-    * one-pass amortization over [[searchTablesPartitionPruned]]'s
-    * file skipping. The UNION of every query's sketch verdict becomes
+    * one-pass amortization over a [[Narrow.Sketch]] search's file
+    * skipping on the partitioned snapshot. The UNION of every query's sketch verdict becomes
     * the single partition predicate (a table allowed for any query is
     * read once; per-query conjunctions ignore tables they cannot
     * match, so the union costs correctness nothing), and the union of

@@ -365,13 +365,23 @@ object Artifacts {
       }
     }
 
+  /** Raised by a `read` that supplies its schema (so inference can no
+    * longer fail) and found no file under a dataset whose writes
+    * always leave one: the listing has not caught up with the write.
+    * [[loadOrBuildWith]] retries it like a failed inference.
+    */
+  final class Unsettled(path: String)
+      extends RuntimeException(s"no data file listed under $path yet")
+
   /** Read-after-publish settle (round-17 visibility-lag drill): on an
     * eventually-consistent store, a version committed milliseconds
     * ago can expose an EMPTY file listing to the very reader that
     * published it — schema inference then fails on a dataset that is
-    * durably complete. Bounded retry with the session listing cache
-    * dropped between attempts; on a strongly-consistent store the
-    * first attempt succeeds and this is zero-cost.
+    * durably complete, and a read with a supplied schema raises
+    * [[Unsettled]] instead of returning an empty frame. Bounded retry
+    * with the session listing cache dropped between attempts; on a
+    * strongly-consistent store the first attempt succeeds and this is
+    * zero-cost.
     */
   private def readSettled(spark: SparkSession,
       read: String => DataFrame, path: String): DataFrame = {
@@ -379,6 +389,10 @@ object Artifacts {
     while (true) {
       try return read(path)
       catch {
+        case _: Unsettled if attempt < 20 =>
+          attempt += 1
+          org.apache.spark.sql.graftx.Bridge.invalidateFileListingCache(spark)
+          Thread.sleep(100)
         case e: org.apache.spark.sql.AnalysisException
             if attempt < 20 &&
               e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>

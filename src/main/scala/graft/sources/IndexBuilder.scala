@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.Tokenize
 
@@ -68,6 +69,27 @@ object IndexBuilder {
   /** Unpivot one corpus table to `(raw, table_id, column_id, row_id)`. */
   private def unpivot(spark: SparkSession, dir: String, t: Corpus.Table): DataFrame =
     unpivotRows(spark.read.parquet(s"$dir/${t.name}.parquet"), t)
+
+  /** The postings schema, in the column order [[postingsFromRaw]]
+    * writes. Postings reads pass it instead of inferring it: inference
+    * is a Spark job per read, and the live index reads the base and its
+    * delta parts once per search.
+    */
+  val PostingsSchema: StructType =
+    StructType.fromDDL("key string, table_id int, column_id int, row_id bigint")
+
+  /** Non-partitioned postings datasets read with [[PostingsSchema]].
+    * Every such write leaves at least one file, even for no rows, so
+    * a read that lists none has met a listing lagging the write, not
+    * an empty index: it raises [[Artifacts.Unsettled]] (retried by
+    * [[Artifacts.loadOrBuildWith]]) rather than serve an empty frame.
+    * `inputFiles` is the driver-side listing the read already made.
+    */
+  def readPostings(spark: SparkSession, paths: String*): DataFrame = {
+    val df = spark.read.schema(PostingsSchema).parquet(paths: _*)
+    if (df.inputFiles.isEmpty) throw new Artifacts.Unsettled(paths.mkString(", "))
+    df
+  }
 
   /** Raw unpivoted cells -> postings: drop nulls, clean, drop empties,
     * narrow the id types. The single definition of "what a posting
@@ -164,8 +186,8 @@ object IndexBuilder {
     * the existence-only probe this replaced.
     */
   def loadOrSnapshot(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.loadOrBuild(spark, snapshotPath(dir), corpusPaths(dir), semKey)(
-      t => writeSnapshotAs(build(spark, dir), t))
+    Artifacts.loadOrBuildWith(spark, snapshotPath(dir), corpusPaths(dir), semKey)(
+      t => writeSnapshotAs(build(spark, dir), t))(readPostings(spark, _))
 
   /** The lake-layout snapshot's location, beside the merged one
     * (shares its fingerprint, so semantic changes invalidate both).
@@ -218,8 +240,8 @@ object IndexBuilder {
       // every partition-pruned search (found by DegenerateLakeSpec).
       // With the schema supplied the empty dir reads as an empty
       // frame; a populated dir reads identically to inference.
-      spark.read.schema(
-          "key string, column_id int, row_id bigint, table_id int")
+      spark.read.schema(StructType(
+          PostingsSchema.filterNot(_.name == "table_id") :+ PostingsSchema("table_id")))
         .parquet(p)
     }
 

@@ -102,7 +102,7 @@ object IndexStream {
     val base = IndexBuilder.loadOrSnapshot(spark, dir)
     val batches = deltaBatches(spark, deltaDir)
     if (batches.nonEmpty)
-      base.unionByName(spark.read.parquet(batches: _*))
+      base.unionByName(IndexBuilder.readPostings(spark, batches: _*))
     else base
   }
 
@@ -155,7 +155,7 @@ object IndexStream {
     val batches = deltaBatches(spark, deltaDir)
     if (batches.isEmpty) base
     else base.unionByName(
-        spark.read.parquet(batches: _*)
+        IndexBuilder.readPostings(spark, batches: _*)
           .groupBy("key").agg(count(lit(1)).as("kdf")))
       .groupBy("key").agg(sum("kdf").cast("long").as("kdf"))
   }
@@ -185,7 +185,7 @@ object IndexStream {
     if (batches.isEmpty) base
     else base.unionByName(
         graft.operators.JoinSearch.tableKeySketch(
-          spark.read.parquet(batches: _*)))
+          IndexBuilder.readPostings(spark, batches: _*)))
       .select(col("table_id"), col("column_id"), explode(col("bits")).as("bit"))
       .groupBy("table_id", "column_id")
       .agg(sort_array(collect_set("bit")).as("bits"))

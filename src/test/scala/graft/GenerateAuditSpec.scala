@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Literal}
 import org.apache.spark.sql.catalyst.plans.logical._
 
@@ -147,8 +148,13 @@ class GenerateAuditSpec extends SparkTestBase {
     "project-expression(r_name)")
 
   test("substitutable non-outer generates in registered plans match the audited set") {
+    // a search's plan reads its column scores as a detached RDD scan;
+    // the fill plans behind those entries are audited with it
     val found = SparkEntry.queries.toSeq.flatMap { case (_, fn) =>
-      dangerousGenerates(fn(spark, sf0001).queryExecution.analyzed)
+      val fills = scala.collection.mutable.ArrayBuffer.empty[() => DataFrame]
+      val plan = graft.operators.JoinSearch.fillPlans.withValue(fills += _)(
+        fn(spark, sf0001))
+      (plan +: fills.map(_())).flatMap(p => dangerousGenerates(p.queryExecution.analyzed))
     }.toSet
     assert(found == audited,
       "\nthe substitutable non-outer generate set changed — audit each " +

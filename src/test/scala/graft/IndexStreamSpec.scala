@@ -224,13 +224,12 @@ class IndexStreamSpec extends SparkTestBase {
     // must route to it and the scan must still skip other tables'
     // files).
     val query = Seq(("Quixotic Banyan", "STARDUST")).toDF(cols: _*)
-    val res = JoinSearch.searchTablesPartitionPruned(lake,
-      IndexStream.tableSketchWithDeltas(spark, sf0001, delta),
-      IndexStream.keyStatsWithDeltas(spark, sf0001, delta),
-      query, cols)
-    // round-18: the probed row-key sets session-persist
-    // (rowKeysShared), so the bytable scan lives inside the cached
-    // FILL plan — descend into it (the PrunedSearchSpec convention).
+    val narrow = JoinSearch.Narrow.Sketch(
+      IndexStream.tableSketchWithDeltas(spark, sf0001, delta))
+    val res = JoinSearch.searchTables(lake, query, cols, narrow = narrow)
+    // the bytable scan runs in the search's `colscores:` fill, whose
+    // cached frame is detached from the search's plan: audit the fill
+    // plan (the PrunedSearchSpec convention).
     def bytableScans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[FileSourceScanExec] = p match {
       case f: FileSourceScanExec if f.relation.location.rootPaths
@@ -241,7 +240,8 @@ class IndexStreamSpec extends SparkTestBase {
         bytableScans(s.relation.cachedPlan)
       case other => other.children.flatMap(bytableScans)
     }
-    val scan = bytableScans(res.queryExecution.sparkPlan).head
+    val scan = bytableScans(JoinSearch.columnScoresFill(lake, query, cols, narrow)
+      .queryExecution.sparkPlan).head
     assert(scan.partitionFilters.exists(_.references.exists(_.name == "table_id")))
     assert(scan.selectedPartitions.totalNumberOfFiles <
       scan.relation.location.inputFiles.length,

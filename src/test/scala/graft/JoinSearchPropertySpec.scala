@@ -43,7 +43,8 @@ class JoinSearchPropertySpec extends SparkTestBase {
         "shuffled" -> JoinSearch.searchTablesShuffled(index, query, cols),
         // random tiny alphabets maximize sketch-bucket sharing: the
         // prune must stay conservative under arbitrary hash geometry
-        "pruned" -> JoinSearch.searchTablesPruned(index, query, cols))
+        "pruned" -> JoinSearch.searchTables(index, query, cols, narrow =
+          JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(index))))
         .map { case (n, df) => n -> df.as[(Int, Long)].collect().toSeq }
       got.foreach { case (name, scores) =>
         assert(scores == ref, s"round $round: $name diverged from windowed")
@@ -72,7 +73,8 @@ class JoinSearchPropertySpec extends SparkTestBase {
         "rowWise" -> JoinSearch.searchTablesRowWise(index, query, cols3),
         "cellWise" -> JoinSearch.searchTablesCellWise(index, query, cols3),
         "shuffled" -> JoinSearch.searchTablesShuffled(index, query, cols3),
-        "pruned" -> JoinSearch.searchTablesPruned(index, query, cols3))
+        "pruned" -> JoinSearch.searchTables(index, query, cols3, narrow =
+          JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(index))))
         .map { case (n, df) => n -> df.as[(Int, Long)].collect().toSeq }
       got.foreach { case (name, scores) =>
         assert(scores == ref, s"round $round: $name diverged from windowed at N=3")
@@ -107,7 +109,8 @@ class JoinSearchPropertySpec extends SparkTestBase {
         "rowWise" -> JoinSearch.searchTablesRowWise(index, query, cols5),
         "cellWise" -> JoinSearch.searchTablesCellWise(index, query, cols5),
         "shuffled" -> JoinSearch.searchTablesShuffled(index, query, cols5),
-        "pruned" -> JoinSearch.searchTablesPruned(index, query, cols5))
+        "pruned" -> JoinSearch.searchTables(index, query, cols5, narrow =
+          JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(index))))
         .map { case (n, df) => n -> df.as[(Int, Long)].collect().toSeq }
       got.foreach { case (name, scores) =>
         assert(scores == ref, s"round $round: $name diverged from windowed at N=5")

@@ -112,12 +112,14 @@ class JoinSearchSpec extends SparkTestBase {
   test("df-capped search: generous cap is a no-op, tight cap rejects hot keys") {
     val uncapped = JoinSearch.searchTables(index, query, cols)
       .as[(Int, Long)].collect().toSeq
-    val noop = JoinSearch.searchTablesCapped(index, query, cols, 1000000L)
+    def capped(maxDf: Long) = JoinSearch.searchTables(index, query, cols,
+      narrow = JoinSearch.Narrow.DfCap(maxDf))
+    val noop = capped(1000000L)
       .as[(Int, Long)].collect().toSeq
     assert(noop == uncapped)
     // 'avatar' has df 5 in the golden index; capping at 4 removes it,
     // so only the gore-verbinski/pirates query row can still match
-    val tight = JoinSearch.searchTablesCapped(index, query, cols, 4L)
+    val tight = capped(4L)
       .as[(Int, Long)].collect().toSeq
     assert(tight == Seq((125, 2L)), s"got $tight")
   }
@@ -270,7 +272,8 @@ class JoinSearchSpec extends SparkTestBase {
     val emptyIdx = Seq.empty[(String, Int, Int, Long)]
       .toDF("key", "table_id", "column_id", "row_id")
     assert(JoinSearch.searchTables(emptyIdx, query, cols).count() == 0L)
-    assert(JoinSearch.searchTablesCapped(emptyIdx, query, cols, 10L).count() == 0L)
+    assert(JoinSearch.searchTables(emptyIdx, query, cols,
+      narrow = JoinSearch.Narrow.DfCap(10L)).count() == 0L)
     assert(JoinSearch.searchTablesShuffled(emptyIdx, query, cols).count() == 0L)
     assert(JoinSearch.searchTablesSeqParity(index, emptyQ, cols).count() == 0L)
   }

@@ -387,6 +387,36 @@ class ObjectStoreDrillSpec extends SparkTestBase {
     }
   }
 
+  test("a postings snapshot read under listing lag settles, never serves an empty frame") {
+    // `IndexBuilder.readPostings`, the snapshot's read, supplies the
+    // schema, so an empty listing no longer fails inference. On a
+    // lagging store a version published moments ago lists EMPTY; the
+    // read must wait that out, or fail loudly once its retries run
+    // out, never return (and let a session cache) an empty index.
+    val (adv, local) = advTmp("graft-osd-postings")
+    val upstream = s"$local/up.parquet"
+    Seq(("alpha", 1, 0, 0L), ("beta", 1, 1, 0L), ("alpha", 2, 0, 7L))
+      .toDF("key", "table_id", "column_id", "row_id")
+      .write.parquet(upstream)
+    def load() = Artifacts.loadOrBuildWith(spark, s"$adv/snapshot",
+      Seq(upstream), "drill-postings")(
+      t => spark.read.parquet(upstream).write.parquet(t))(
+      graft.sources.IndexBuilder.readPostings(spark, _))
+    assert(load().count() === 3L, "published under a consistent listing")
+    // a fresh reader of that version while its files are still
+    // inside the lag window (version resolution probes by key, so the
+    // version itself is found)
+    def readLagged(lagMs: Long) = {
+      sys.props("graft.advfs.lag.ms") = lagMs.toString
+      org.apache.spark.sql.graftx.Bridge.invalidateFileListingCache(spark)
+      try load() finally sys.props -= "graft.advfs.lag.ms"
+    }
+    // visible again within the read's retry budget (~2 s): it settles
+    assert(readLagged(1500L).count() === 3L, "a lagging listing read as a short snapshot")
+    // hidden past the budget: the read fails instead of answering empty
+    intercept[Artifacts.Unsettled](readLagged(600000L))
+  }
+
   test("heartbeat on an object store keeps a long hold from being stolen as stale") {
     val (adv, local) = advTmp("graft-osd-beat")
     val dd = s"$adv/delta"

@@ -465,9 +465,15 @@ class PlanGoldenSpec extends SparkTestBase {
     // 4/3/0 -> 2/1/0 (anchors persist): same as the "search" pin —
     // the warm capped search is the cached key-set scan, the cached
     // anchors broadcast, and the two scoring exchanges.
-    pin("search_dfcap_frac", Ex(2, 1, 0)) {
-      JoinSearch.searchTablesCappedFraction(
-        idx, Queries.ordersQuery(spark, dir), Queries.ordersCols)
+    // 2/1/0 -> 0/0/0: the capped search is `searchTables` with a
+    // DfCapFraction narrowing, so like the "search" pin its plan is
+    // the scoring tail over the one detached `colscores:` partition;
+    // the guard's broadcasts and the total-postings aggregate all run
+    // in the fill.
+    pin("search_dfcap_frac", Ex(0, 0, 0)) {
+      JoinSearch.searchTables(idx, Queries.ordersQuery(spark, dir),
+        Queries.ordersCols,
+        narrow = JoinSearch.Narrow.DfCapFraction(JoinSearch.DefaultCapFractionBp))
     }
     pin.check()
   }

@@ -32,7 +32,8 @@ class PrunedSearchSpec extends SparkTestBase {
   test("pruned search equals unpruned on the wide fixture") {
     val base = JoinSearch.searchTables(wideIndex, wideQuery, cols)
       .as[(Int, Long)].collect().toSeq
-    val pruned = JoinSearch.searchTablesPruned(wideIndex, wideQuery, cols)
+    val pruned = JoinSearch.searchTables(wideIndex, wideQuery, cols,
+        narrow = JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(wideIndex)))
       .as[(Int, Long)].collect().toSeq
     assert(base == Seq((125, 2L)))
     assert(pruned == base)
@@ -96,39 +97,46 @@ class PrunedSearchSpec extends SparkTestBase {
     families.foreach { case (q, qcols) =>
       val base = JoinSearch.searchTables(idx, q, qcols)
         .as[(Int, Long)].collect().toSeq
-      val pruned = JoinSearch.searchTablesPruned(idx, q, qcols)
+      val pruned = JoinSearch.searchTables(idx, q, qcols,
+          narrow = JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(idx)))
         .as[(Int, Long)].collect().toSeq
       assert(pruned == base, s"pruned diverged on $qcols: $pruned vs $base")
     }
   }
 
   test("pruned probe keeps the postings exchange-free (plan shape)") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
-    // every shuffle in the pruned probe must sit INSIDE a broadcast
+    // the Sketch narrowing's probe is the postings below the fill's
+    // first posting-side exchange, the (table_id, row_id) key-set
+    // aggregation: no shuffle may sit under it outside a broadcast
     // subtree (the sketch/query sides are tiny and may aggregate);
-    // the posting lineage itself never moves — same claim the capped
-    // probe makes. Audited on the NON-ADAPTIVE executedPlan:
-    // sparkPlan predates EnsureRequirements so exchanges do not
-    // exist in it (an absence check there is vacuous — round-8 fix),
-    // and AQE hides stages behind leaves.
-    def nonBroadcastShuffles(p: SparkPlan): Seq[SparkPlan] = p match {
+    // the posting lineage itself never moves before the conjunction —
+    // same claim the capped probe makes. Audited on the NON-ADAPTIVE
+    // executedPlan: sparkPlan predates EnsureRequirements so
+    // exchanges do not exist in it (an absence check there is
+    // vacuous — round-8 fix), and AQE hides stages behind leaves.
+    def nonBroadcastShuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
       case _: BroadcastExchangeExec => Seq.empty
       case s: ShuffleExchangeExec =>
         s +: s.children.flatMap(nonBroadcastShuffles)
       case other => other.children.flatMap(nonBroadcastShuffles)
     }
-    val m = JoinSearch.mappings(
-      JoinSearch.prepareInput(wideQuery, cols), cols)
+    def byTableRow(s: ShuffleExchangeExec): Boolean = s.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.references.map(_.name).toSet == Set("table_id", "row_id")
+      case _ => false
+    }
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val allowed = JoinSearch.prunedTables(
-        JoinSearch.tableKeySketch(wideIndex), m, cols.size)
-      val probed = JoinSearch.probe(wideIndex, m)
-        .join(broadcast(allowed), Seq("table_id"), "left_semi")
-      val bad = nonBroadcastShuffles(probed.queryExecution.executedPlan)
-      assert(bad.isEmpty,
-        s"pruned probe shuffles the postings:\n${probed.queryExecution.executedPlan}")
+      val fill = JoinSearch.columnScoresFill(wideIndex, wideQuery, cols,
+        JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketch(wideIndex)))
+      val plan = fill.queryExecution.executedPlan
+      val keySets = nonBroadcastShuffles(plan).filter(byTableRow)
+      assert(keySets.nonEmpty, s"no (table_id, row_id) exchange in the fill:\n$plan")
+      val bad = keySets.flatMap(_.children.flatMap(nonBroadcastShuffles))
+      assert(bad.isEmpty, s"pruned probe shuffles the postings:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -136,10 +144,9 @@ class PrunedSearchSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val part = IndexBuilder.loadOrSnapshotPartitioned(spark, sf0001)
     val sketch = IndexBuilder.loadOrBuildTableSketch(spark, sf0001)
-    val stats = IndexBuilder.loadOrBuildKeyStats(spark, sf0001)
     val q = Queries.customerQuery(spark, sf0001)
-    val res = JoinSearch.searchTablesPartitionPruned(
-      part, sketch, stats, q, Queries.customerCols)
+    val res = JoinSearch.searchTables(part, q, Queries.customerCols,
+      narrow = JoinSearch.Narrow.Sketch(sketch))
 
     // identical ranked output to the unpruned default.
     val base = JoinSearch.searchTables(
@@ -158,13 +165,10 @@ class PrunedSearchSpec extends SparkTestBase {
 
     // every scan of the partitioned snapshot carries the table set as
     // a PARTITION filter (zero data-filter fallback) and lists only
-    // the allowed partitions' files into the plan. Round-18: the
-    // probed row-key sets session-persist (rowKeysShared), so the
-    // -bytable scan lives inside the cached FILL plan — still static
-    // literals from the sketch verdict, still planner-time file
-    // skipping — and the audit descends into it (through an
-    // AQE-wrapped fill when another test populated the persist first,
-    // the BatchSearchSpec convention).
+    // the allowed partitions' files into the plan. The scan runs in
+    // the search's `colscores:` fill, whose cached frame is detached
+    // from the search's plan, so the audit reads the fill plan itself
+    // (still descending through AQE wrappers and cached relations).
     def bytableScans(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[FileSourceScanExec] = p match {
       case f: FileSourceScanExec if f.relation.location.rootPaths
@@ -175,7 +179,8 @@ class PrunedSearchSpec extends SparkTestBase {
         bytableScans(s.relation.cachedPlan)
       case other => other.children.flatMap(bytableScans)
     }
-    val scans = bytableScans(res.queryExecution.sparkPlan)
+    val scans = bytableScans(JoinSearch.columnScoresFill(part, q,
+      Queries.customerCols, JoinSearch.Narrow.Sketch(sketch)).queryExecution.sparkPlan)
     assert(scans.nonEmpty, "no scan of the partitioned snapshot found")
     scans.foreach { f =>
       assert(f.partitionFilters.exists(_.references.exists(_.name == "table_id")),
@@ -198,10 +203,9 @@ class PrunedSearchSpec extends SparkTestBase {
     // not throw.
     val part = IndexBuilder.loadOrSnapshotPartitioned(spark, sf0001)
     val sketch = IndexBuilder.loadOrBuildTableSketch(spark, sf0001)
-    val stats = IndexBuilder.loadOrBuildKeyStats(spark, sf0001)
     val hopeless = Seq(("zzzzqqqqxxxx", "wwwwyyyyvvvv")).toDF("a", "b")
-    val res = JoinSearch.searchTablesPartitionPruned(
-      part, sketch, stats, hopeless, Seq("a", "b"))
+    val res = JoinSearch.searchTables(part, hopeless, Seq("a", "b"),
+      narrow = JoinSearch.Narrow.Sketch(sketch))
     assert(res.count() == 0L)
   }
 

@@ -9,14 +9,16 @@ import graft.operators.JoinSearch
 import graft.sources.{Corpus, IndexBuilder}
 import graft.streaming.{DeltaLog, IndexStream}
 
-/** The default search's warm and live budgets and its freshness. A
-  * repeated (index, query) pair is served from the `colscores:`
+/** The anchored searches' warm and live budgets and their freshness.
+  * A repeated (index, query) pair is served from the `colscores:`
   * persist: the warm search is the top-columns/table-score tail over
-  * one cached partition, ONE Spark job. A committed delta changes the
-  * live index's identity, so the same query recomputes and sees the
-  * new rows; the answers equal the windowed cross-check strategy,
-  * which never reads `colscores:`. That recompute has a pinned job
-  * count and leaves exactly one new resident RDD per landed batch.
+  * one cached partition, ONE Spark job, for every narrowing and tail
+  * (a sketch narrowing adds its verdict collect). A committed delta
+  * changes the live index's identity, so the same query recomputes
+  * and sees the new rows; the answers equal the windowed cross-check
+  * strategy, which never reads `colscores:`. That recompute has a
+  * pinned job count and leaves exactly one new resident RDD per
+  * landed batch; loading the live index itself runs no job.
   */
 class WarmSearchSpec extends SparkTestBase {
   import spark.implicits._
@@ -81,19 +83,57 @@ class WarmSearchSpec extends SparkTestBase {
   private def residentRdds(): Set[Int] =
     spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
 
-  test("a repeated search on the same index and query runs exactly one Spark job") {
-    val idx = IndexBuilder.cached(spark, sf0001)
-    // read once: a parquet read infers its schema with a job of its own
-    val query = Queries.customerQuery(spark, sf0001)
-    def search = JoinSearch.searchTables(idx, query, Queries.customerCols)
-    val first = rows(search)
-    assert(first.nonEmpty)
-    var again = Seq.empty[(Int, Long)]
-    val jobs = jobsOf { again = rows(search) }
-    assert(jobs.size == 1, s"warm search ran ${jobs.size} Spark jobs: $jobs")
-    assert(again == first)
-    assert(first == rows(
-      JoinSearch.searchTablesWindowed(idx, query, Queries.customerCols)))
+  // resolved once, on first use: a parquet read infers its schema
+  // with a job of its own
+  private lazy val idx = IndexBuilder.cached(spark, sf0001)
+  private lazy val customerQuery = Queries.customerQuery(spark, sf0001)
+  private lazy val partIdx = IndexBuilder.loadOrSnapshotPartitioned(spark, sf0001)
+  private lazy val partSketch = IndexBuilder.loadOrBuildTableSketch(spark, sf0001)
+
+  private def narrowed(narrow: => JoinSearch.Narrow): () => DataFrame =
+    () => JoinSearch.searchTables(idx, customerQuery, cols, narrow = narrow)
+
+  /** Every form served from one `colscores:` entry, with its warm job
+    * budget: the tail over the cached partition, plus, for a sketch
+    * narrowing, the collect of its session-cached verdict.
+    */
+  private val warmForms: Seq[(String, Int, () => DataFrame)] = Seq(
+    ("search", 1, narrowed(JoinSearch.Narrow.All)),
+    ("df-capped search", 1, narrowed(JoinSearch.Narrow.DfCap(10000L))),
+    ("fraction-capped search", 1,
+      narrowed(JoinSearch.Narrow.DfCapFraction(JoinSearch.DefaultCapFractionBp))),
+    ("seq-parity search", 1,
+      () => JoinSearch.searchTablesSeqParity(idx, customerQuery, cols)),
+    ("column search", 1, () => JoinSearch.searchColumns(idx, customerQuery, cols)),
+    ("sketch-pruned search", 2,
+      narrowed(JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(idx)))),
+    ("partition-pruned search", 2, () => JoinSearch.searchTables(partIdx,
+      customerQuery, cols, narrow = JoinSearch.Narrow.Sketch(partSketch))))
+
+  for ((form, budget, search) <- warmForms)
+    test(s"a repeated $form on the same index and query runs exactly " +
+        (if (budget == 1) "one Spark job" else s"$budget Spark jobs")) {
+      def answer = search().collect().toSeq
+      val first = answer
+      assert(first.nonEmpty)
+      var again = Seq.empty[org.apache.spark.sql.Row]
+      val jobs = jobsOf { again = answer }
+      assert(jobs.size == budget, s"warm $form ran ${jobs.size} Spark jobs: $jobs")
+      assert(again == first)
+      if (form == "search")
+        assert(first == JoinSearch.searchTablesWindowed(idx, customerQuery, cols)
+          .collect().toSeq)
+    }
+
+  test("loading the live index runs no Spark job") {
+    val delta = Files.createTempDirectory("graft-load-delta").toString
+    landPlanted(delta, 0)
+    // the first load may build and publish the base snapshot
+    IndexStream.loadWithDeltas(spark, sf0001, delta)
+    var live: DataFrame = null
+    val jobs = jobsOf { live = IndexStream.loadWithDeltas(spark, sf0001, delta) }
+    assert(jobs.isEmpty, s"loadWithDeltas ran ${jobs.size} Spark jobs: $jobs")
+    assert(live.where("row_id >= 999960001").count() == 4L)
   }
 
   test("a committed delta makes the same query recompute and include its rows") {
@@ -122,8 +162,8 @@ class WarmSearchSpec extends SparkTestBase {
     val before = rows(JoinSearch.searchTables(live, query, cols))
 
     landPlanted(delta, 0)
-    // resolved outside the count: reading the new delta file set runs
-    // its own schema jobs
+    // resolved outside the count, which pins the search alone (the
+    // load's own budget, zero jobs, is pinned above)
     val index = live
     var first = Seq.empty[(Int, Long)]
     val jobs = jobsOf { first = rows(JoinSearch.searchTables(index, query, cols)) }
