@@ -480,8 +480,8 @@ SELECT key, count(*) AS kdf FROM live GROUP BY key ORDER BY key"""))),
       (s, dir) => JoinSearch.searchTablesSeqParity(wideIndex(s, dir), wideQuery(s, dir), wideCols),
       Some(SearchOracle.tableScoresSeqParityOver(wideIdxCtes, wideSpec))),
     // Batched search service: three heterogeneous queries (2/2/3
-    // attributes) answered in ONE index pass — the oracle runs them
-    // one at a time, proving the shared-scan batching exact.
+    // attributes), each answered by its own cached single search and
+    // tagged with its query_id — the oracle runs them one at a time.
     Q("search_batch_queries",
       (s, dir) => JoinSearch.searchTablesBatch(index(s, dir), Seq(
         ("customer", customerQuery(s, dir), customerCols),
@@ -576,18 +576,19 @@ SELECT key, count(*) AS kdf FROM live GROUP BY key ORDER BY key"""))),
       (s, dir) => JoinSearch.searchTables(index(s, dir), customerQuery(s, dir), customerCols,
         narrow = JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(index(s, dir)))),
       Some(SearchOracle.tableScores(customerSpec))),
-    // batching + file skipping composed: three queries, one shared
-    // probe, one unioned partition predicate. Oracle = the queries
-    // one at a time, proving both accelerations exact together.
+    // batching + file skipping composed: three queries, each its own
+    // Sketch-narrowed search with its own verdict as the partition
+    // predicate — the customer and part members share their cached
+    // entries with search_pruned_tables and search_part_pruned.
+    // Oracle = the queries one at a time.
     Q("search_batch_pruned",
-      (s, dir) => JoinSearch.searchTablesBatchPartitionPruned(
+      (s, dir) => JoinSearch.searchTablesBatch(
         IndexBuilder.loadOrSnapshotPartitioned(s, dir),
-        IndexBuilder.cachedTableSketch(s, dir),
-        IndexBuilder.cachedKeyStats(s, dir),
         Seq(
           ("customer", customerQuery(s, dir), customerCols),
           ("orders", ordersQuery(s, dir), ordersCols),
-          ("part", partQuery(s, dir), partCols))),
+          ("part", partQuery(s, dir), partCols)),
+        narrow = JoinSearch.Narrow.Sketch(IndexBuilder.cachedTableSketch(s, dir))),
       Some(SearchOracle.tableScoresBatch(Seq(
         "customer" -> customerSpec,
         "orders" -> ordersSpec,

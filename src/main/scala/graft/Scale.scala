@@ -293,9 +293,8 @@ object Scale {
         JoinSearch.searchTables(IndexBuilder.cached(spark, d), custQ, Queries.customerCols,
           narrow = JoinSearch.Narrow.Sketch(
             JoinSearch.tableKeySketchCached(IndexBuilder.cached(spark, d))))),
-      // the batched service: both queries above in ONE index pass —
-      // its ratio should track the single searches', with the probe
-      // paid once.
+      // the batched service: both queries above, each its own cached
+      // single search — its ratio should track the single searches'.
       "search_batch" -> (d =>
         JoinSearch.searchTablesBatch(IndexBuilder.cached(spark, d), Seq(
           ("customer", custQ, Queries.customerCols),

@@ -281,9 +281,7 @@ object Hybrid {
   }
 
   /** `search_hybrid_batch`: N hybrid queries answered in one shared
-    * corpus pass per tower — the batched-search arrangement
-    * ([[graft.operators.JoinSearch.searchTablesBatch]]) lifted to
-    * fused retrieval. Per-probe results are EXACTLY the single-probe
+    * corpus pass per tower. Per-probe results are EXACTLY the single-probe
     * fusion's (HybridSpec pins probe 0 row-for-row against
     * [[rrfTopK]]); the saving is the shared tokenize/tf/df lineage
     * and the one probe-set broadcast.

@@ -33,9 +33,10 @@ import graft.functions.Tokenize
   * absolute or corpus-fraction cap, or the sketch pre-filter), and it,
   * [[searchTablesSeqParity]] and [[searchColumns]] are tails over one
   * session-cached column-score frame per (narrowed index, query), the
-  * `colscores:` family. The other `searchTables*` forms are the
-  * cross-check strategies the property spec compares against, and the
-  * batch pair.
+  * `colscores:` family. [[searchTablesBatch]] is the union of its
+  * members' [[searchTables]] answers, so a batch member reads and
+  * fills its single search's entry. The other `searchTables*` forms
+  * are the cross-check strategies the property spec compares against.
   *
   * Scale posture: the query table is tiny next to the index, so
   * mappings are broadcast (J1 never shuffles the postings side twice);
@@ -106,8 +107,8 @@ object JoinSearch {
 
   /** J5: one distributed semi-join replaces the reference's per-column
     * `WHERE tokenized IN (...)` literal-list SQL round-trips
-    * (`handlers.py:62-71`, `Par_Search.py:196-200`). The staged,
-    * batch and cross-check strategies probe this way.
+    * (`handlers.py:62-71`, `Par_Search.py:196-200`). The staged and
+    * cross-check strategies probe this way.
     * [[searchTables]] instead filters on the query's distinct key list
     * — the reference's IN list, once for all columns: the same
     * postings, but the key set is a plan literal rather than a
@@ -126,7 +127,7 @@ object JoinSearch {
     * the SAME few query tables across ~30 search invocations per
     * session. In the anchored strategies those branches now sit
     * inside cached fills ([[searchTables]]' `colscores:`, the
-    * `rowkeys:` and `anchors:` frames of the batch forms), so a warm
+    * `rowkeys:` and `anchors:` frames of [[conjunctionAnchored]]), so a warm
     * [[searchTables]] reads the maps frame only for its semantic
     * hash, half of the `colscores:` key; a `colscores:` miss reads
     * its key list once per maps hash ([[queryKeys]]). The frame is
@@ -338,8 +339,8 @@ object JoinSearch {
   /** Per-key posting counts over an index, session-cached: the
     * anchor-selection statistic as a BUILD-TIME artifact rather than
     * a per-query pass, for the hot-key guard ([[Narrow.DfCap]], which
-    * needs every key's df, not only the probed ones) and the batch
-    * forms. Without it those searches scan the index twice
+    * needs every key's df, not only the probed ones) and
+    * [[conjunctionAnchored]]. Without it those scan the index twice
     * (once under the anchor-statistic lineage, once under the row key
     * sets); with it, once — the stats scan amortizes over every query
     * in the session. [[searchTables]] does not read it: it counts its
@@ -381,13 +382,10 @@ object JoinSearch {
   private def probeKeyStats(postings: DataFrame): DataFrame =
     postings.groupBy("key").agg(count(lit(1)).as("kdf"))
 
-  /** The conjunction's corpus-side aggregation, exposed so the batch
-    * forms can compute it ONCE and share it across query branches
-    * (round-17: with the aggregation now exchange-free over the
-    * (t,r)-clustered cache there is no Exchange node left for
-    * Catalyst's ReuseExchange to share — the session persist plays
-    * that role, materializing the one per-(table,row) key-set frame
-    * every branch consumes). `kmap` is built HERE, once per corpus
+  /** The conjunction's corpus-side aggregation: the per-(table,row)
+    * key sets, which [[rowKeysShared]] persists for the stage queries
+    * and cross-check strategies and [[searchTables]]' fill reads
+    * unpersisted. `kmap` is built HERE, once per corpus
     * row, not per anchor candidate — a hot-anchor query (every key
     * of a categorical wide row) fans each row out to many map_keys,
     * and the old post-join placement rebuilt the map per fanned row.
@@ -406,13 +404,12 @@ object JoinSearch {
     * probed lineage (round-18, second pass): the per-(table,row) key
     * set is the one corpus-side materialization that
     * [[conjunctionAnchored]], the windowed/row-wise/cell-wise
-    * cross-check strategies, the batch forms and the five registered
-    * stage queries (W1/J1/W2/A1/W3) derive from the same probe — each
-    * re-ran the probe semi-join + the aggregation per invocation, a
-    * dozen re-derivations of the same frame per session on the
-    * flagship query tables. One fill serves them all — the batch
-    * forms' `batch-rowkeys` arrangement generalized to a single
-    * `rowkeys:` family (same LRU bound,
+    * cross-check strategies and the five registered stage queries
+    * (W1/J1/W2/A1/W3) derive from the same probe — each re-ran the
+    * probe semi-join + the aggregation per invocation, a dozen
+    * re-derivations of the same frame per session on the flagship
+    * query tables. One fill serves them all, a single `rowkeys:`
+    * family (same LRU bound,
     * [[graft.sources.DfCache.familyCap]]). Two routes deliberately
     * stay off it: [[searchTables]] (every narrowing) reads the key
     * sets once per `colscores:` fill, so it aggregates them
@@ -440,9 +437,8 @@ object JoinSearch {
       .select(col("kc.key").as("key"), col("table_id"),
         col("kc.column_id").as("column_id"), col("row_id"))
 
-  /** The query-side anchor/req derivation of the anchored conjunction
-    * (factored out round-18 so the batch forms can tag and UNION the
-    * per-query frames): per query row, in ONE aggregation (round-17 —
+  /** The query-side anchor/req derivation of the anchored conjunction:
+    * per query row, in ONE aggregation (round-17 —
     * previously a distinct + per-map_key window + separate req
     * groupBy + join, three query-side exchanges and five stages for
     * the same tiny frame), its full entry list (multiplicity kept)
@@ -459,7 +455,7 @@ object JoinSearch {
     * query's keys (`queryKeyDf`, broadcast here): [[searchTables]]
     * builds it inside its `colscores:` fill from its probe output's
     * key counts; [[anchorsOf]] is the persisted form
-    * [[conjunctionAnchored]] and the batch forms share.
+    * [[conjunctionAnchored]] reads.
     */
   private def anchorsPlan(maps: DataFrame, queryKeyDf: DataFrame): DataFrame =
     maps
@@ -472,8 +468,7 @@ object JoinSearch {
       .select(col("map_key"), col("a.key").as("anchor_key"), col("req"))
 
   /** [[anchorsPlan]] over any posting-count statistic, session-
-    * persisted (`anchors:`) for [[conjunctionAnchored]] and the batch
-    * forms.
+    * persisted (`anchors:`) for [[conjunctionAnchored]].
     */
   private def anchorsOf(maps: DataFrame, keyDf: DataFrame): DataFrame = {
     // narrow the statistic to the query's keys FIRST (broadcast
@@ -486,12 +481,11 @@ object JoinSearch {
     // table-sized, but its DERIVATION is stage-heavy — the maps
     // distinct, the stats semi-join, the left-outer join and the
     // aggregation are four sequential broadcast/shuffle rounds of
-    // tiny data, re-run per invocation by every hinted search (and
-    // once per query by the batch forms). After the rowkeys persist
-    // moved the corpus side out of the warm path, this chain WAS the
-    // warm path: the measured per-invocation cost is stage-launch
-    // latency, not data. Same small-query contract as the qmaps
-    // persist it derives from.
+    // tiny data, re-run per invocation by every hinted search. After
+    // the rowkeys persist moved the corpus side out of the warm path,
+    // this chain WAS the warm path: the measured per-invocation cost
+    // is stage-launch latency, not data. Same small-query contract as
+    // the qmaps persist it derives from.
     graft.sources.DfCache.getOrPersist(maps.sparkSession,
       s"anchors:${a.semanticHash()}")(a)
   }
@@ -618,8 +612,9 @@ object JoinSearch {
     * .detach]]): a warm search neither builds, hashes nor re-renders
     * the fill plan — it is the cached maps lookup plus the
     * topColumns/tableScores/limit tail over the ONE cached partition,
-    * a single exchange-free job. A [[Narrow.Sketch]] search adds the
-    * collect of its session-cached sketch verdict, one more job.
+    * a single exchange-free job, for every narrowing: a
+    * [[Narrow.Sketch]] search's table list is session-memoized
+    * ([[prunedTableIds]]).
     *
     * The fill, on a miss: the probe is one filter on the query's
     * distinct key list (see [[probe]]), collected once per maps hash
@@ -688,113 +683,32 @@ object JoinSearch {
       anchorsPlan(maps, probeKeyStats(probed)), colCount))
   }
 
-  /** Batched multi-query search: N query tables answered in ONE pass
-    * over the index. The reference's CLI runs one query per
-    * invocation (`main.py:6-22` — each run re-reads the whole
-    * `main_tokenized` postings table); a search SERVICE amortizes
-    * instead: the union of every query's keys drives a single probe
-    * semi-join, and the per-(table,row) key aggregation — the only
-    * stage that shuffles postings — appears once in the physical
-    * plan, shared by every query's conjunction via Spark's exchange
-    * reuse (the per-query branches are plan-identical up to that
-    * aggregation, so Catalyst materializes it once).
-    *
-    * Per-query results are EXACT — identical to running
-    * [[searchTables]] per query: foreign keys in a row's collected
-    * key set cannot create matches (the conjunction requires this
-    * query's `req` keys; extra map entries are ignored) and cannot
-    * change column attribution (min-column per (table,row,key)
-    * depends only on the index, not on which batch probed it).
-    * `BatchSearchSpec` pins both the parity and the shared-scan plan
-    * shape.
+  /** Batched multi-query search: N query tables, each answered by
+    * its own [[searchTables]] under the batch's `maxTables` and
+    * `narrow`, tagged with its query_id. The reference's CLI runs one
+    * query per invocation (`main.py:6-22`); a batch is the union of
+    * those runs, so a member's rows equal its single search by
+    * construction — its conjunction floor counts only its own keys,
+    * and a [[Narrow.Sketch]] verdict is its own — and every member
+    * reads and fills the `colscores:` entry its single search would:
+    * a warm batch is the members' tails, and a batch warms each
+    * member for a later single search. On a miss the members fill,
+    * and probe the index, one after another; there is no shared
+    * probe across members.
     *
     * Output: `(query_id, table_id, join_score)` — per-query
     * top-`maxTables`, ordered (query_id, score desc, table_id).
     */
   def searchTablesBatch(index: DataFrame,
       queries: Seq[(String, DataFrame, Seq[String])],
-      maxTables: Int = 20): DataFrame = {
+      maxTables: Int = 20, narrow: Narrow = Narrow.All): DataFrame = {
     require(queries.nonEmpty, "searchTablesBatch needs at least one query")
     require(queries.map(_._1).distinct.size == queries.size,
       s"duplicate query_ids: ${queries.map(_._1).mkString(", ")}")
-    val prepared = queries.map { case (qid, q, cols) =>
-      (qid, preparedMappings(q, cols), cols)
-    }
-    val allKeys = prepared.map(_._2.select("key")).reduce(_ unionByName _)
-      .distinct()
-    val probed = index.join(broadcast(allKeys), Seq("key"), "left_semi")
-    // ONE shared per-(table,row) key-set materialization for every
-    // query (round-17: this sharing used to ride Catalyst's
-    // ReuseExchange over the aggregation's shuffle; the aggregation
-    // is now exchange-free over the clustered cache, so the persist
-    // carries the sharing — semantically keyed like the other
-    // session lineages, one cached copy per distinct batch probe),
-    // consumed ONCE by the grouped scoring pass (round-18).
-    batchScores(rowKeysShared(probed), indexKeyStats(index), prepared,
-      maxTables)
-  }
-
-  /** The batch forms' conjunction + scoring as ONE query_id-tagged
-    * pass (round-18, second pass): the per-query anchor/req frames —
-    * all query-side, broadcast-sized — are tagged with their query_id
-    * and column count and UNIONED, so the shared key-set frame is
-    * scanned once and the score aggregations run once keyed by
-    * (query_id, ...), instead of once per query branch. Previously
-    * each of Q branches re-scanned the persisted key sets, re-ran the
-    * (table, column) aggregation, the top-columns window and the
-    * table rollup — Q× the passes for frames whose union is the same
-    * size (§2.3/§2.4: fewer passes, same bytes).
-    *
-    * Per-query results are EXACT — identical to the branch-per-query
-    * form (BatchSearchSpec ties them to the one-at-a-time searches):
-    *  - the tagged union of anchor frames joined to the exploded key
-    *    sets produces, for each query_id, exactly the rows its own
-    *    branch's broadcast join produced (the join key and filters
-    *    are per-row, reading only that query's anchor/req/col_count);
-    *  - aggregations and windows keyed by (query_id, ...) partition
-    *    the computation per query exactly as the separate branches
-    *    did (col_count is constant per query_id, so carrying it in
-    *    the grouping key changes no group);
-    *  - the per-query top-maxTables via row_number over
-    *    (join_score desc, table_id asc) IS the branch's
-    *    orderBy(...).limit(maxTables) — a total order per query,
-    *    table_id being unique within a (query_id) group.
-    */
-  private def batchScores(rowKeys: DataFrame, stats: DataFrame,
-      prepared: Seq[(String, DataFrame, Seq[String])],
-      maxTables: Int): DataFrame = {
-    val anchorsAll = prepared.map { case (qid, m, cols) =>
-      anchorsOf(m, stats).select(lit(qid).as("query_id"), col("map_key"),
-        col("anchor_key"), col("req"), lit(cols.size).as("col_count"))
+    queries.map { case (qid, q, cols) =>
+      searchTables(index, q, cols, maxTables, narrow)
+        .select(lit(qid).as("query_id"), col("table_id"), col("join_score"))
     }.reduce(_ unionByName _)
-    // project to what the scoring needs before the aggregation's
-    // exchange (§2.3) — row_id/map_key/kmap are consumed here.
-    val conj = rowKeys
-      .select(col("table_id"), col("row_id"), col("kcs"), col("kmap"),
-        explode(col("kcs")).as("kc"))
-      .join(broadcast(anchorsAll), col("kc.key") === col("anchor_key"))
-      .where(size(col("kcs")) >= col("col_count") &&
-        expr("forall(req, k -> map_contains_key(kmap, k))"))
-      .select(col("query_id"), col("col_count"), col("table_id"),
-        col("kmap"), explode(col("req")).as("key"))
-      .select(col("query_id"), col("col_count"), col("table_id"),
-        expr("try_element_at(kmap, key)").cast("int").as("column_id"))
-    val colScores = conj
-      .groupBy("query_id", "col_count", "table_id", "column_id")
-      .agg(count(lit(1)).as("join_score"))
-    val wTop = Window.partitionBy("query_id", "table_id")
-      .orderBy(col("join_score").desc, col("column_id").asc)
-    val top = colScores
-      .withColumn("rn", row_number().over(wTop))
-      .where(col("rn") <= col("col_count"))
-    val tbl = top.groupBy("query_id", "table_id")
-      .agg(sum("join_score").cast("long").as("join_score"))
-    val wLim = Window.partitionBy("query_id")
-      .orderBy(col("join_score").desc, col("table_id").asc)
-    tbl
-      .withColumn("rn", row_number().over(wLim))
-      .where(col("rn") <= maxTables)
-      .select(col("query_id"), col("table_id"), col("join_score"))
       .orderBy(col("query_id"), col("join_score").desc, col("table_id"))
   }
 
@@ -1076,84 +990,41 @@ object JoinSearch {
     * [[searchTables]] on the survivors. Both sides of every join here
     * are sketch/query-sized — nothing touches the postings.
     */
-  def prunedTables(sketch: DataFrame, maps: DataFrame, colCount: Int): DataFrame =
-    // the single-query verdict IS the grouped evaluation at batch
-    // size 1 (round-17 unification — `PrunedSearchSpec` has tied the
-    // two row-for-row since round 9): one code path, and the single
-    // form inherits the grouped one's query-INDEPENDENT, now
-    // session-cached per-table bit union instead of re-flattening
-    // the sketch per query.
-    prunedTablesGrouped(sketch, Seq(("q", maps, colCount)))
-      .select("table_id")
-
-  /** [[prunedTables]] for a BATCH of queries in ONE grouped
-    * evaluation (round-9 verdict #6): the per-query breadth/coverage
-    * verdicts compute from a single pass over the sketch frame keyed
-    * by `query_id`, instead of N independent sketch subplans unioned
-    * — at a lake catalog of T tables and a batch of Q queries the
-    * routing cost is one (T×Q)-row aggregation over metadata-sized
-    * frames, not Q plan branches each rescanning the sketch. Output
-    * `(query_id, table_id)`: exactly [[prunedTables]] per query
-    * (same one-sided checks — `PrunedSearchSpec` ties the grouped
-    * verdict to the per-query one row-for-row at a 50-query batch).
-    */
-  def prunedTablesGrouped(sketch: DataFrame,
-      queries: Seq[(String, DataFrame, Int)]): DataFrame = {
-    import sketch.sparkSession.implicits._
-    // an empty batch has a well-defined answer — no (query, table)
-    // pairs — not a reduce() UnsupportedOperationException out of a
-    // public API (round-10 ADVICE). table_id keeps the sketch's own
-    // type so downstream unions don't fork schemas.
-    if (queries.isEmpty)
-      return sketch.select(lit("").as("query_id"), col("table_id")).limit(0)
+  def prunedTables(sketch: DataFrame, maps: DataFrame, colCount: Int): DataFrame = {
     val keyBit = pmod(hash(col("key")), lit(SketchBits))
-    val tagged = queries.map { case (qid, maps, _) =>
-      maps.select(lit(qid).as("query_id"), col("key"), col("map_key"))
-    }.reduce(_ unionByName _)
-    val colCounts = queries.map { case (qid, _, n) => (qid, n) }
-      .toDF("query_id", "col_count")
-    // per query: all its distinct keys' bits (breadth side).
-    val qbits = tagged.select("query_id", "key").distinct()
-      .groupBy("query_id").agg(collect_set(keyBit).as("qbits"))
-    // per (query, query row): its distinct keys' bits (coverage).
-    val reqs = tagged.select("query_id", "key", "map_key").distinct()
-      .withColumn("bit", keyBit)
-      .groupBy("query_id", "map_key").agg(collect_set("bit").as("rbits"))
-    // breadth: how many of the table's columns hit any query bit —
-    // per (query, table), but carrying only a count through the agg.
+    // all the query's distinct keys' bits (breadth side).
+    val qbits = maps.select("key").distinct()
+      .agg(collect_set(keyBit).as("qbits"))
+    // per query row: its distinct keys' bits (coverage).
+    val reqs = maps.select("key", "map_key").distinct()
+      .groupBy("map_key").agg(collect_set(keyBit).as("rbits"))
+    // breadth: how many of the table's columns hit any query bit.
     val colsHit = sketch.crossJoin(broadcast(qbits))
       .withColumn("col_hit",
         expr("exists(bits, b -> array_contains(qbits, b))"))
-      .groupBy("query_id", "table_id")
+      .groupBy("table_id")
       .agg(sum(when(col("col_hit"), 1).otherwise(0)).as("cols_hit"))
-    // the table's full bit union is query-INDEPENDENT: aggregate it
-    // once per table, not once per (query, table) — at a Q-query
-    // batch the per-pair form shuffles and dedups Q copies of every
-    // table's concatenated bit arrays (round-9 review). Session-
-    // persisted per sketch (round-17): every pruned search re-ran
-    // this flatten+distinct over the whole sketch; it is a pure
+    // the table's full bit union is query-INDEPENDENT: session-
+    // persisted per sketch (round-17), so a pruned search does not
+    // re-run this flatten+distinct over the whole sketch; it is a pure
     // function of the sketch frame, metadata-sized.
     val tableBits = graft.sources.DfCache.getOrPersist(
       sketch.sparkSession, s"tablebits:${sketch.semanticHash()}")(
       sketch.groupBy("table_id")
         .agg(array_distinct(flatten(collect_list("bits"))).as("tbits")))
     val verdict = colsHit
+      .where(col("cols_hit") >= colCount)
       .join(broadcast(tableBits), Seq("table_id"))
-      .join(broadcast(reqs), Seq("query_id"))
-      .join(broadcast(colCounts), Seq("query_id"))
-      .where(col("cols_hit") >= col("col_count") &&
-        expr("forall(rbits, b -> array_contains(tbits, b))"))
-      .select("query_id", "table_id").distinct()
+      .crossJoin(broadcast(reqs))
+      .where(expr("forall(rbits, b -> array_contains(tbits, b))"))
+      .select("table_id").distinct()
     // session-persisted verdict (round-18): the routing evaluation is
-    // metadata-sized but STAGE-heavy — the tagged union, qbits/reqs
-    // distinct+aggregation pairs, the colsHit sketch pass and three
-    // broadcast joins are ~a dozen sequential tiny stages, and every
-    // pruned search (and every [[prunedTableIds]] collect) re-ran
-    // them per invocation: measured 1.6-2.1 s warm of
-    // search_batch_pruned's 3.8 s, the query's dominant cost. The
-    // verdict is a pure function of (sketch, query batch) — exactly
-    // what its semantic hash keys — and is bounded by
-    // |queries| x |tables| rows.
+    // metadata-sized but STAGE-heavy — the qbits/reqs distinct +
+    // aggregation pairs, the colsHit sketch pass and the broadcast
+    // joins are ~a dozen sequential tiny stages, which every pruned
+    // search re-ran per invocation. The verdict is a pure function of
+    // (sketch, query) — exactly what its semantic hash keys — and is
+    // bounded by the lake's table count.
     graft.sources.DfCache.getOrPersist(sketch.sparkSession,
       s"prunedverdict:${verdict.semanticHash()}")(verdict)
   }
@@ -1165,58 +1036,17 @@ object JoinSearch {
     * (bounded by the lake's table count, like the catalog listing
     * itself), and static partition pruning requires plan-time
     * literals — this is the same altitude as a query planner reading
-    * partition metadata. Every id is boxed through `Number` so int
-    * and long sketches both route.
+    * partition metadata. The list is session-memoized (`prunedids:`)
+    * under the verdict's semantic hash, the key of the verdict's own
+    * persist, so a warm [[Narrow.Sketch]] search runs no routing job
+    * and the memo is exactly as fresh as the verdict. Every id is
+    * boxed through `Number` so int and long sketches both route.
     */
-  def prunedTableIds(sketch: DataFrame, maps: DataFrame, colCount: Int): Seq[Int] =
-    prunedTables(sketch, maps, colCount)
-      .collect().map(_.getAs[Number]("table_id").intValue).toSeq.sorted
-
-  /** The two flagship accelerations composed: [[searchTablesBatch]]'s
-    * one-pass amortization over a [[Narrow.Sketch]] search's file
-    * skipping on the partitioned snapshot. The UNION of every query's sketch verdict becomes
-    * the single partition predicate (a table allowed for any query is
-    * read once; per-query conjunctions ignore tables they cannot
-    * match, so the union costs correctness nothing), and the union of
-    * every query's keys drives the one shared probe. Per-query
-    * results stay exact — identical to running each search alone
-    * (same argument as [[searchTablesBatch]], plus the prune's
-    * conservatism).
-    */
-  def searchTablesBatchPartitionPruned(partIndex: DataFrame,
-      sketch: DataFrame, stats: DataFrame,
-      queries: Seq[(String, DataFrame, Seq[String])],
-      maxTables: Int = 20): DataFrame = {
-    require(queries.nonEmpty, "batch needs at least one query")
-    require(queries.map(_._1).distinct.size == queries.size,
-      s"duplicate query_ids: ${queries.map(_._1).mkString(", ")}")
-    val prepared = queries.map { case (qid, q, cols) =>
-      (qid, preparedMappings(q, cols), cols)
+  def prunedTableIds(sketch: DataFrame, maps: DataFrame, colCount: Int): Seq[Int] = {
+    val verdict = prunedTables(sketch, maps, colCount)
+    graft.sources.DfCache.memo(sketch.sparkSession,
+        s"prunedids:${verdict.semanticHash()}") {
+      verdict.collect().map(_.getAs[Number]("table_id").intValue).toSeq.sorted
     }
-    // ONE routing job AND one grouped evaluation for the whole
-    // batch ([[prunedTablesGrouped]] — round-9: previously the union
-    // job held N independent sketch subplans): the per-query
-    // verdicts come from a single query_id-keyed pass before the
-    // (metadata-sized) collect.
-    val allowed = prunedTablesGrouped(sketch,
-        prepared.map { case (qid, m, cols) => (qid, m, cols.size) })
-      .select("table_id").distinct()
-      .collect().map(_.getAs[Number]("table_id").intValue).toSeq.sorted
-    val allKeys = prepared.map(_._2.select("key")).reduce(_ unionByName _)
-      .distinct()
-    val probed = partIndex.where(col("table_id").isin(allowed: _*))
-      .join(broadcast(allKeys), Seq("key"), "left_semi")
-    // ONE shared per-(table,row) key-set materialization — the
-    // [[searchTablesBatch]] persist applied to the pruned batch
-    // (round-18; round-17 left this path on Catalyst's ReuseExchange,
-    // which shares only the aggregation's EXCHANGE: each query branch
-    // still re-ran the reduce-side aggregation and the key-set dedup
-    // over the shared shuffle files, and the fraction grows with
-    // batch size). The PartitionFilters evidence lives INSIDE the
-    // cached fill plan — still static literals from the sketch
-    // verdict, still planner-time file skipping — and BatchSearchSpec
-    // asserts it there. Consumed ONCE by the grouped scoring pass
-    // (round-18 second pass, [[batchScores]]).
-    batchScores(rowKeysShared(probed), stats, prepared, maxTables)
   }
 }

@@ -751,8 +751,7 @@ object TextAnalysis {
     phraseCore(probed, phrase, k)
   }
 
-  /** Batched multi-phrase retrieval — [[JoinSearch.searchTablesBatch]]'s
-    * amortization applied to phrases: N phrase requests answered in
+  /** Batched multi-phrase retrieval: N phrase requests answered in
     * ONE pass over the positional index. The union of every request's
     * terms drives a single literal-pushdown probe, the per-doc
     * position map aggregates ONCE (the only corpus-side shuffle,
@@ -1339,8 +1338,7 @@ object TextAnalysis {
   }
 
   /** Batched BM25: per-(probe, doc) scores for N query-by-example
-    * probe documents in ONE postings pass — the `searchTablesBatch`
-    * arrangement applied to text retrieval. The corpus-side work
+    * probe documents in ONE postings pass. The corpus-side work
     * (tokenize, explode, tf aggregation) happens once against the
     * UNION of all probes' terms; per-term df and per-doc dl are
     * probe-independent, so they too are shared; only the final

@@ -204,8 +204,8 @@ ORDER BY join_score DESC, table_id ASC LIMIT $maxTables""")
 
   /** Oracle for [[graft.operators.JoinSearch.searchTablesBatch]]: the
     * UNION of the per-query end-to-end statements, each tagged with
-    * its query_id — deliberately the one-at-a-time formulation, so
-    * hash equality proves the engine's shared-scan batching exact.
+    * its query_id — the one-at-a-time formulation, which the engine's
+    * batch (a union of its members' single searches) also is.
     */
   def tableScoresBatch(qs: Seq[(String, QuerySpec)], maxTables: Int = 20): String = {
     val branches = qs.zipWithIndex.map { case ((qid, q), i) =>

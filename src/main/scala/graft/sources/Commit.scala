@@ -314,18 +314,4 @@ object Commit {
           true
         }
     }
-
-  /** Single-winner claim to REMOVE one lease incarnation, identified
-    * by `ident` (content-hash + mtime — the same identity the
-    * stale-takeover branch claims). Used by the cas release path: the
-    * rename path claims by atomically MOVING the lease file to a
-    * tombstone, which an object store cannot do; here the claim is a
-    * conditional create of `.lease-tomb-<ident>`, arbitrating release
-    * against concurrent TTL takeovers of the same incarnation —
-    * exactly one of them wins the right to delete.
-    */
-  def claimIncarnation(conf: Configuration, dir: Path, ident: String,
-      note: String): Boolean =
-    createExclusive(conf, new Path(dir, s".lease-tomb-$ident"),
-      note.getBytes("UTF-8"), tmpPrefix = ".lease-tmp-")
 }

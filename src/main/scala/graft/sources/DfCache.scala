@@ -23,11 +23,12 @@ import org.apache.spark.storage.StorageLevel
   * (`colscores:` — one per (index, query maps) pair, the default
   * search's narrow column scores, the only entry a live-index search
   * adds per landed batch — `qmaps:`, and the `rowkeys:`, `anchors:`,
-  * `idxstats:`, `tablebits:`, ... frames of the capped, batch, staged
-  * and cross-check strategies — one entry per distinct probe batch)
+  * `idxstats:`, `tablebits:`, ... frames of the capped, staged and
+  * cross-check strategies — one entry per distinct probe batch)
   * are exactly what leaked storage in a long-lived serve session.
   * Scalar memos follow the same per-family cap (`qkeys:`, the default
-  * search's collected query key list, adds one per distinct query).
+  * search's collected query key list, adds one per distinct query;
+  * `prunedids:`, a sketch search's table list, one per verdict).
   *
   * A build runs once per key: concurrent callers of one missing key
   * wait on that key's lock and share the first caller's entry, so a

@@ -206,16 +206,11 @@ object IndexBuilder {
     * measured LOSING locally in round 7, SCALE.md.) Mirrors the
     * per-table reality of a data lake, where each table is its own
     * dataset and the "index" federates them.
-    */
-  def writePartitionedSnapshot(spark: SparkSession, dir: String): String =
-    Artifacts.publish(spark, partitionedSnapshotPath(dir), corpusPaths(dir),
-      semKey)(t => writePartitionedSnapshotAs(build(spark, dir), t))
-
-  /** The lake layout for ANY postings source (the
-    * [[writeSnapshotAs]] twin): hive-partitioned by `table_id`,
-    * key-clustered within each partition. Exposed so streaming
-    * compaction can fold base+deltas straight into the file-skipping
-    * layout ([[graft.streaming.IndexStream.compactPartitioned]]).
+    *
+    * This writer takes ANY postings source (the [[writeSnapshotAs]]
+    * twin): [[loadOrSnapshotPartitioned]] builds the snapshot with it,
+    * and streaming compaction folds base+deltas straight into the
+    * file-skipping layout ([[graft.streaming.IndexStream.compactPartitioned]]).
     */
   def writePartitionedSnapshotAs(postings: DataFrame, path: String): String = {
     postings

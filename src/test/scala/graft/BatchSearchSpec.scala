@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-
 import graft.operators.JoinSearch
 import graft.sources.IndexBuilder
 
-/** The batched multi-query search must (1) return exactly what the
-  * one-at-a-time searches return, per query, and (2) actually share
-  * the postings-side work in ONE physical plan — the whole point of
-  * batching: the per-(table,row) key aggregation's exchanges appear
-  * once and every other query branch consumes them via ReusedExchange.
+/** The batched multi-query search is the union of its members' single
+  * searches, so it must return exactly what the one-at-a-time searches
+  * return, per query, under every narrowing. Its warm job budget, and
+  * the member entries it warms, are pinned in `WarmSearchSpec`.
   */
 class BatchSearchSpec extends SparkTestBase {
   import spark.implicits._
@@ -32,103 +28,35 @@ class BatchSearchSpec extends SparkTestBase {
     assert(got.map(_._1).distinct.sorted == Seq("customer", "orders", "part"))
   }
 
-  test("the batched plan consumes the shared key-set frame in ONE pass") {
-    // round-17 moved the sharing from ReuseExchange to the explicit
-    // rowkeys session persist (the clustered cache left no exchange
-    // to reuse); round-18's grouped scoring pass goes further: the
-    // per-query anchor frames are query_id-tagged and unioned, so the
-    // whole batch reads the cached key-set relation EXACTLY ONCE —
-    // not once per query branch — and the score aggregations run once
-    // keyed by query_id.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val df = JoinSearch.searchTablesBatch(
+  test("a member's conjunction floor counts only its own keys") {
+    // member a's only row cleans to the one key x twice: no corpus row
+    // holds two distinct keys of a, so a matches nothing. A probe
+    // shared with b puts b's y into table 1's row, which would lift
+    // that row over a two-key floor and score (a, 1, 2).
+    val idx = Seq(("x", 1, 1, 1L), ("y", 1, 2, 1L), ("z", 2, 1, 5L), ("y", 2, 2, 5L))
+      .toDF("key", "table_id", "column_id", "row_id")
+    val cols = Seq("qa", "qb")
+    val members = Seq(
+      ("a", Seq(("x", "x")).toDF(cols: _*), cols),
+      ("b", Seq(("y", "z")).toDF(cols: _*), cols))
+    val got = JoinSearch.searchTablesBatch(idx, members)
+      .as[(String, Int, Long)].collect().toSeq
+    assert(got == Seq(("b", 2, 2L)), s"got $got")
+    members.foreach { case (qid, q, cs) =>
+      assert(got.filter(_._1 == qid).map(r => (r._2, r._3)) ==
+        JoinSearch.searchTablesWindowed(idx, q, cs).as[(Int, Long)].collect().toSeq,
+        s"member $qid diverged from windowed")
+    }
+  }
+
+  test("a Sketch-narrowed batch on the partitioned snapshot equals the plain batch") {
+    val got = JoinSearch.searchTablesBatch(
+        IndexBuilder.loadOrSnapshotPartitioned(spark, sf0001), queryTriples(sf0001),
+        narrow = JoinSearch.Narrow.Sketch(IndexBuilder.loadOrBuildTableSketch(spark, sf0001)))
+      .as[(String, Int, Long)].collect().toSeq
+    val base = JoinSearch.searchTablesBatch(
         IndexBuilder.cached(spark, sf0001), queryTriples(sf0001))
-      val plan = df.queryExecution.executedPlan
-      val ims = plan.collect {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-            if s.output.exists(_.name == "kmap") => s
-      }
-      assert(ims.size == 1,
-        s"expected ONE key-set cache scan for the whole batch:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
-
-  test("the pruned batch shares ONE cached key-set frame AND keeps the partition filter") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val df = JoinSearch.searchTablesBatchPartitionPruned(
-        IndexBuilder.loadOrSnapshotPartitioned(spark, sf0001),
-        IndexBuilder.loadOrBuildTableSketch(spark, sf0001),
-        IndexBuilder.loadOrBuildKeyStats(spark, sf0001),
-        queryTriples(sf0001))
-      val plan = df.queryExecution.executedPlan
-      // round-18: the sharing moved from ReuseExchange (which shared
-      // only the aggregation's exchange — each branch re-ran the
-      // reduce side) to the explicit rowkeys session persist, and the
-      // second pass replaced the per-query branches with ONE
-      // query_id-tagged scoring pass: the whole batch consumes the
-      // cached key-set relation exactly once.
-      val ims = plan.collect {
-        case s: InMemoryTableScanExec
-            if s.output.exists(_.name == "kmap") => s
-      }
-      assert(ims.size == 1,
-        s"expected ONE key-set cache scan for the whole batch:\n$plan")
-      // the partition predicate now lives in the cached FILL plan —
-      // still static literals from the sketch verdict, still
-      // planner-time file skipping on the -bytable snapshot. The fill
-      // plan is AQE-wrapped when an earlier test populated the
-      // session persist with AQE on (suite-order-dependent), and
-      // plain collect cannot see through AdaptiveSparkPlanExec —
-      // descend explicitly.
-      def bytableScans(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[FileSourceScanExec] = p match {
-        case f: FileSourceScanExec if f.relation.location.rootPaths
-          .exists(_.toString.contains("-bytable")) => Seq(f)
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          bytableScans(a.inputPlan)
-        case other => other.children.flatMap(bytableScans)
-      }
-      val scans = bytableScans(ims.head.relation.cachedPlan)
-      assert(scans.nonEmpty &&
-        scans.forall(_.partitionFilters.exists(
-          _.references.exists(_.name == "table_id"))),
-        s"pruned batch lost the partition predicate:\n${ims.head.relation.cachedPlan}")
-      // and per-query parity with the plain batch.
-      val got = df.as[(String, Int, Long)].collect().toSeq
-      val base = JoinSearch.searchTablesBatch(
-          IndexBuilder.cached(spark, sf0001), queryTriples(sf0001))
-        .as[(String, Int, Long)].collect().toSeq
-      assert(got == base)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
-
-  test("under AQE the executed batch still reads the key-set cache once") {
-    // the pre-round-18 form pinned runtime ReuseExchange across the
-    // per-query branches; the grouped scoring pass has no branches to
-    // reuse between — the equivalent guarantee is structural: after
-    // execution, the adaptive plan holds exactly ONE scan of the
-    // cached key-set relation (a regression to per-query branches
-    // shows up as one scan per query).
-    val df = JoinSearch.searchTablesBatch(
-      IndexBuilder.cached(spark, sf0001), queryTriples(sf0001))
-    df.collect()
-    def cacheScans(p: org.apache.spark.sql.execution.SparkPlan): Int =
-      (p match {
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-            if s.output.exists(_.name == "kmap") => 1
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          cacheScans(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          cacheScans(q.plan)
-        case _ => 0
-      }) + p.children.map(cacheScans).sum
-    val n = cacheScans(df.queryExecution.executedPlan)
-    assert(n == 1,
-      s"expected ONE key-set cache scan in the adaptive plan, got $n:\n" +
-        df.queryExecution.executedPlan.toString.take(3000))
+      .as[(String, Int, Long)].collect().toSeq
+    assert(got.nonEmpty && got == base)
   }
 }

@@ -133,7 +133,12 @@ class PlanGoldenSpec extends SparkTestBase {
     // tagged-union broadcast over the shared key-set scan plus the
     // grouped scoring (column scores, top-columns window, per-query
     // limit window, output sort).
-    pin("batch_search", Ex(4, 1, 0)) {
+    // 4/1/0 -> 0/0/0: the batch is the union of its members' single
+    // searches, each the exchange-free tail over its one cached
+    // `colscores:` partition (the `search` pin above); the shared
+    // key-set scan, the tagged-union broadcast and the grouped
+    // scoring are gone.
+    pin("batch_search", Ex(0, 0, 0)) {
       JoinSearch.searchTablesBatch(idx, Seq(
         ("customer", custQ, Queries.customerCols),
         ("part", partQ, Queries.partCols)))

@@ -56,37 +56,6 @@ class PrunedSearchSpec extends SparkTestBase {
     assert(prunedPostings == 2L, s"got $prunedPostings")
   }
 
-  test("grouped batch verdict == per-query verdicts at a 50-query batch") {
-    // 50 single-column queries, each probing one distinct key: query
-    // qN asks for table N's "common" plus its own marker key, so the
-    // verdicts genuinely differ per query. The grouped evaluation
-    // (round-9 #6 — ONE query_id-keyed pass over the sketch, not 50
-    // sketch subplans) must reproduce prunedTables query for query.
-    val markers = (1 to 50).map(t => (s"mark$t", t, 2, 1L))
-    val idx = wideIndex.unionByName(
-      markers.toDF("key", "table_id", "column_id", "row_id"))
-    val sketch = JoinSearch.tableKeySketch(idx)
-    val queries = (1 to 50).map { t =>
-      (s"q$t", Seq(("common", s"mark$t")).toDF("a", "b"), cols)
-    }
-    val prepared = queries.map { case (qid, q, cs) =>
-      (qid, JoinSearch.mappings(JoinSearch.prepareInput(q, cs), cs), cs.size)
-    }
-    val grouped = JoinSearch.prunedTablesGrouped(sketch, prepared)
-      .collect()
-      .map(r => (r.getString(0), r.getAs[Number]("table_id").intValue))
-      .toSet
-    val perQuery = prepared.flatMap { case (qid, m, n) =>
-      JoinSearch.prunedTables(sketch, m, n).collect()
-        .map(r => qid -> r.getAs[Number]("table_id").intValue)
-    }.toSet
-    assert(grouped === perQuery)
-    assert(grouped.nonEmpty)
-    // sanity: verdicts are per-query, not a shared union — every
-    // query keeps its own marker table and no other query's.
-    assert(grouped.contains(("q7", 7)) && !grouped.contains(("q7", 8)))
-  }
-
   test("pruned search hash-equals unpruned on every sf0.001 search family") {
     val idx = IndexBuilder.cached(spark, sf0001)
     val families = Seq(

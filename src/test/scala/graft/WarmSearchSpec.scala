@@ -12,8 +12,8 @@ import graft.streaming.{DeltaLog, IndexStream}
 /** The anchored searches' warm and live budgets and their freshness.
   * A repeated (index, query) pair is served from the `colscores:`
   * persist: the warm search is the top-columns/table-score tail over
-  * one cached partition, ONE Spark job, for every narrowing and tail
-  * (a sketch narrowing adds its verdict collect). A committed delta
+  * one cached partition, ONE Spark job, for every narrowing and tail,
+  * and a batch is its members' tails. A committed delta
   * changes the live index's identity, so the same query recomputes
   * and sees the new rows; the answers equal the windowed cross-check
   * strategy, which never reads `colscores:`. That recompute has a
@@ -93,9 +93,16 @@ class WarmSearchSpec extends SparkTestBase {
   private def narrowed(narrow: => JoinSearch.Narrow): () => DataFrame =
     () => JoinSearch.searchTables(idx, customerQuery, cols, narrow = narrow)
 
-  /** Every form served from one `colscores:` entry, with its warm job
-    * budget: the tail over the cached partition, plus, for a sketch
-    * narrowing, the collect of its session-cached verdict.
+  private lazy val members = Seq(
+    ("customer", customerQuery, cols),
+    ("orders", Queries.ordersQuery(spark, sf0001), Queries.ordersCols),
+    ("part", Queries.partQuery(spark, sf0001), Queries.partCols))
+
+  /** Every form served from `colscores:` entries, with its warm job
+    * budget. A sketch narrowing's table list is memoized per verdict,
+    * so its warm search is the tail alone (it was 2 jobs while the
+    * list was collected on every call); a batch is its members'
+    * tails, unioned and sorted in the same job.
     */
   private val warmForms: Seq[(String, Int, () => DataFrame)] = Seq(
     ("search", 1, narrowed(JoinSearch.Narrow.All)),
@@ -105,10 +112,13 @@ class WarmSearchSpec extends SparkTestBase {
     ("seq-parity search", 1,
       () => JoinSearch.searchTablesSeqParity(idx, customerQuery, cols)),
     ("column search", 1, () => JoinSearch.searchColumns(idx, customerQuery, cols)),
-    ("sketch-pruned search", 2,
+    ("sketch-pruned search", 1,
       narrowed(JoinSearch.Narrow.Sketch(JoinSearch.tableKeySketchCached(idx)))),
-    ("partition-pruned search", 2, () => JoinSearch.searchTables(partIdx,
-      customerQuery, cols, narrow = JoinSearch.Narrow.Sketch(partSketch))))
+    ("partition-pruned search", 1, () => JoinSearch.searchTables(partIdx,
+      customerQuery, cols, narrow = JoinSearch.Narrow.Sketch(partSketch))),
+    ("batch search", 1, () => JoinSearch.searchTablesBatch(idx, members)),
+    ("partition-pruned batch search", 1, () => JoinSearch.searchTablesBatch(partIdx,
+      members, narrow = JoinSearch.Narrow.Sketch(partSketch))))
 
   for ((form, budget, search) <- warmForms)
     test(s"a repeated $form on the same index and query runs exactly " +
@@ -124,6 +134,25 @@ class WarmSearchSpec extends SparkTestBase {
         assert(first == JoinSearch.searchTablesWindowed(idx, customerQuery, cols)
           .collect().toSeq)
     }
+
+  test("a batch fills its members' entries: a member's single search after it runs one Spark job") {
+    // a literal no other search carries gives the member a maps hash,
+    // and so a `colscores:` entry, of its own: cold until the batch
+    val query = customerQuery.where(s"c_name <> 'batch-member-${System.nanoTime()}'")
+    val batch = Seq(("fresh", query, cols),
+      ("part", Queries.partQuery(spark, sf0001), Queries.partCols))
+    var fromBatch = Seq.empty[(String, Int, Long)]
+    val fill = jobsOf {
+      fromBatch = JoinSearch.searchTablesBatch(idx, batch)
+        .as[(String, Int, Long)].collect().toSeq
+    }
+    assert(fill.size > 1, s"the batch found the fresh member warm: $fill")
+    var single = Seq.empty[(Int, Long)]
+    val jobs = jobsOf { single = rows(JoinSearch.searchTables(idx, query, cols)) }
+    assert(jobs.size == 1, s"a member's search after its batch ran ${jobs.size} Spark jobs: $jobs")
+    assert(single.nonEmpty &&
+      single == fromBatch.collect { case ("fresh", t, s) => (t, s) })
+  }
 
   test("loading the live index runs no Spark job") {
     val delta = Files.createTempDirectory("graft-load-delta").toString
