@@ -113,21 +113,19 @@ object Bpe {
     */
   private def train(spark: SparkSession, documents: => DataFrame,
       n: Int): (DataFrame, DataFrame) = {
-    var words = wordFreqOf(documents).localCheckpoint(false)
+    var words = DfCache.cut(wordFreqOf(documents), DfCache.Cut.Lazy)
     val bests = (1 to n).map { t =>
-      val best = pairCounts(words)
-        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1)
-        .localCheckpoint(false)
+      val best = DfCache.cut(pairCounts(words)
+        .orderBy(desc("cnt"), asc("a"), asc("b")).limit(1), DfCache.Cut.Lazy)
       // the argmax stays IN the plan (broadcast 0-or-1-row side);
       // left-join-on-true so an exhausted vocabulary (no pair left
       // anywhere) passes words through unchanged instead of
       // annihilating the corpus.
-      words = words.join(broadcast(best.select("a", "b")), lit(true), "left")
+      words = DfCache.cut(words.join(broadcast(best.select("a", "b")), lit(true), "left")
         .select(col("word"), col("wc"),
           when(col("a").isNull, col("w")).otherwise(expr(
             "replace(w, concat('|', a, '||', b, '|'), concat('|', a, b, '|'))"))
-            .as("w"))
-        .localCheckpoint(false)
+            .as("w")), DfCache.Cut.Lazy)
       best.select(lit(t.toLong).as("rank"), col("a").as("pair_a"),
         col("b").as("pair_b"), concat(col("a"), col("b")).as("merged"),
         col("cnt").as("weight"))
@@ -140,11 +138,10 @@ object Bpe {
     * first's checkpointed rounds instead of retraining.
     */
   private def trained(spark: SparkSession, documents: => DataFrame,
-      n: Int, tag: String, upstreams: Seq[String] = Nil)
-      : (DataFrame, DataFrame) = {
+      n: Int, tag: String): (DataFrame, DataFrame) = {
     lazy val pair = train(spark, documents, n)
-    (DfCache.getOrPersist(spark, s"bpe_merges:$tag:$n", upstreams)(pair._1),
-      DfCache.getOrPersist(spark, s"bpe_vocab:$tag:$n", upstreams)(pair._2))
+    (DfCache.getOrPersist(spark, s"bpe_merges:$tag:$n")(pair._1),
+      DfCache.getOrPersist(spark, s"bpe_vocab:$tag:$n")(pair._2))
   }
 
   /** The trained merge table `(rank, pair_a, pair_b, merged, weight)`
@@ -153,9 +150,8 @@ object Bpe {
     * contribute no row, so the table is also the convergence record.
     */
   def mergesOf(spark: SparkSession, documents: => DataFrame,
-      n: Int = Merges, tag: String = "of",
-      upstreams: Seq[String] = Nil): DataFrame =
-    trained(spark, documents, n, tag, upstreams)._1
+      n: Int = Merges, tag: String = "of"): DataFrame =
+    trained(spark, documents, n, tag)._1
 
   /** `(word, wc, n_tok)` projection of a trained words frame: symbols
     * remaining after the merge sequence, counted from the frame
@@ -169,17 +165,15 @@ object Bpe {
 
   /** Trained per-word token counts `(word, wc, n_tok)`. */
   def vocabOf(spark: SparkSession, documents: => DataFrame,
-      n: Int = Merges, tag: String = "of",
-      upstreams: Seq[String] = Nil): DataFrame =
-    tokCounts(trained(spark, documents, n, tag, upstreams)._2)
+      n: Int = Merges, tag: String = "of"): DataFrame =
+    tokCounts(trained(spark, documents, n, tag)._2)
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 
   /** Registered form: the trained merge table over the corpus. */
   def merges(spark: SparkSession, dir: String, n: Int = Merges): DataFrame =
-    mergesOf(spark, docs(spark, dir), n, dir,
-      Seq(s"$dir/documents.parquet"))
+    mergesOf(spark, docs(spark, dir), n, dir)
 
   /** Registered form: per-document token accounting under the trained
     * vocabulary — `(doc_id, n_words, n_word_chars, n_bpe_tokens,
@@ -237,8 +231,7 @@ object Bpe {
     loadOrTrain(spark, dir, n)._2.orderBy("word")
 
   def tokens(spark: SparkSession, dir: String, n: Int = Merges): DataFrame = {
-    val vocab = vocabOf(spark, docs(spark, dir), n, dir,
-      Seq(s"$dir/documents.parquet")).drop("wc")
+    val vocab = vocabOf(spark, docs(spark, dir), n, dir).drop("wc")
     docs(spark, dir)
       .select(col("doc_id"), explode(expr(WordsExpr)).as("word"))
       .join(broadcast(vocab), Seq("word"))
@@ -284,9 +277,8 @@ object Bpe {
     * against this table, never by re-running merges per occurrence.
     */
   def segmentsOf(spark: SparkSession, documents: => DataFrame,
-      n: Int = Merges, tag: String = "of",
-      upstreams: Seq[String] = Nil): DataFrame =
-    trained(spark, documents, n, tag, upstreams)._2
+      n: Int = Merges, tag: String = "of"): DataFrame =
+    trained(spark, documents, n, tag)._2
       .select(col("word"),
         split(expr("trim(BOTH '|' FROM w)"), "\\|\\|").as("syms"))
 
@@ -296,8 +288,7 @@ object Bpe {
     * window, corpus never touched.
     */
   def tokenIdTable(spark: SparkSession, dir: String, n: Int = Merges): DataFrame =
-    tokenIdsOfSegments(segmentsOf(spark, docs(spark, dir), n, dir,
-      Seq(s"$dir/documents.parquet")))
+    tokenIdsOfSegments(segmentsOf(spark, docs(spark, dir), n, dir))
 
   /** Lexicographic symbol → id enumeration over a segments frame —
     * ONE id-assignment rule for the demo and production tables
@@ -337,8 +328,7 @@ object Bpe {
     */
   def tokenIds(spark: SparkSession, dir: String,
       n: Int = Merges, docMod: Int = 25): DataFrame = {
-    val segs = segmentsOf(spark, docs(spark, dir), n, dir,
-      Seq(s"$dir/documents.parquet"))
+    val segs = segmentsOf(spark, docs(spark, dir), n, dir)
     val ids = tokenIdTable(spark, dir, n)
     docs(spark, dir)
       .where(col("doc_id") % docMod === 0)

@@ -95,8 +95,7 @@ object Dedup {
     * MinHash, the Jaccard candidate join, and the verification stage.
     */
   def shingles(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"doc_shingles:$dir",
-      Seq(s"$dir/documents.parquet"))(
+    DfCache.getOrPersist(spark, s"doc_shingles:$dir")(
       shinglesOf(docsSpread(spark, dir)))
 
   /** Shingle lineage over ANY documents frame — the seam that lets
@@ -157,8 +156,7 @@ object Dedup {
     * self-joins both sides of this.
     */
   def bands(spark: SparkSession, dir: String, numSeeds: Int = 8): DataFrame =
-    DfCache.getOrPersist(spark, s"doc_bands:$dir:$numSeeds",
-      Seq(s"$dir/documents.parquet"))(
+    DfCache.getOrPersist(spark, s"doc_bands:$dir:$numSeeds")(
       bandsOf(docsSpread(spark, dir), numSeeds))
 
   /** Band lineage over ANY documents frame (see [[shinglesOf]]):
@@ -202,12 +200,11 @@ object Dedup {
     val sh = shingles(spark, dir)
     // persisted: joined twice per verification (nx and ny) and used
     // by both the MinHash-LSH and n-gram Jaccard queries.
-    val sizes = DfCache.getOrPersist(spark, s"doc_shingle_sizes:$dir",
-        Seq(s"$dir/documents.parquet")) {
+    val sizes = DfCache.getOrPersist(spark, s"doc_shingle_sizes:$dir") {
       sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     }
     jaccardFromInter(
-      pairIntersections(spark, dir, sh, cand), sizes, minJacBp)
+      pairIntersections(spark, sh, cand), sizes, minJacBp)
   }
 
   /** Per-candidate-pair shingle intersection counts, session-persisted
@@ -218,11 +215,10 @@ object Dedup {
     * verification denominators — the denominators join onto this
     * frame, they don't change it). Bounded by |candidate pairs|.
     */
-  private def pairIntersections(spark: SparkSession, dir: String,
+  private def pairIntersections(spark: SparkSession,
       sh: DataFrame, cand: DataFrame): DataFrame = {
     val inter = interOf(sh, cand)
-    DfCache.getOrPersist(spark, s"paircounts:${inter.semanticHash()}",
-      Seq(s"$dir/documents.parquet"))(inter)
+    DfCache.getOrPersist(spark, s"paircounts:${inter.semanticHash()}")(inter)
   }
 
   private def interOf(sh: DataFrame, cand: DataFrame): DataFrame =
@@ -272,8 +268,7 @@ object Dedup {
     * (a cache read has no order guarantee).
     */
   private def cachedMinhashPairs(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"minhash_pairs:$dir",
-      Seq(s"$dir/documents.parquet")) {
+    DfCache.getOrPersist(spark, s"minhash_pairs:$dir") {
       val b = bands(spark, dir)
       val cand = b.select(col("doc_id").as("doc_x"), col("band_id"), col("bh"))
         .join(b.select(col("doc_id").as("doc_y"), col("band_id"), col("bh")),
@@ -312,8 +307,7 @@ object Dedup {
     // denominators), and the flatMapGroups pair expansion is the
     // single most expensive leg of both; the persisted pair frame is
     // bounded by the df cap (<= maxDf^2/2 pairs per rare shingle).
-    DfCache.getOrPersist(spark, s"rare_cands:$dir:$maxDf:$minShared",
-      Seq(s"$dir/documents.parquet"))(
+    DfCache.getOrPersist(spark, s"rare_cands:$dir:$maxDf:$minShared")(
       rareSharedCandidatesUncached(spark, dir, maxDf, minShared))
 
   private def rareSharedCandidatesUncached(spark: SparkSession, dir: String,
@@ -365,14 +359,13 @@ object Dedup {
       maxDf: Int = 100, minShared: Int = 3, minContBp: Int = 8000): DataFrame = {
     val cand = rareSharedCandidates(spark, dir, maxDf, minShared)
     val sh = shingles(spark, dir)
-    val sizes = DfCache.getOrPersist(spark, s"doc_shingle_sizes:$dir",
-        Seq(s"$dir/documents.parquet")) {
+    val sizes = DfCache.getOrPersist(spark, s"doc_shingle_sizes:$dir") {
       sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     }
     // the intersection counts are the SAME persisted frame the
     // Jaccard verifier reads (identical sh/cand lineage — round-18
     // second pass): only the denominator differs below.
-    pairIntersections(spark, dir, sh, cand)
+    pairIntersections(spark, sh, cand)
       .join(sizes.select(col("doc_id").as("doc_x"), col("n").as("nx")), Seq("doc_x"))
       .join(sizes.select(col("doc_id").as("doc_y"), col("n").as("ny")), Seq("doc_y"))
       .withColumn("min_n", least(col("nx"), col("ny")))
@@ -470,9 +463,7 @@ object Dedup {
     // delta bands derive from a delta-FILTERED scan (never the whole
     // corpus), session-cached: the band set feeds both candidate-join
     // sides below.
-    val deltaBands = DfCache.getOrPersist(spark,
-      s"doc_bands_delta:$dir:$deltaMod",
-      Seq(s"$dir/documents.parquet"))(
+    val deltaBands = DfCache.getOrPersist(spark, s"doc_bands_delta:$dir:$deltaMod")(
       bandsOf(spread(spark,
         docs(spark, dir).where(col("doc_id") % deltaMod === 0))))
     val baseBands = loadOrBuildSignatures(spark, dir)
@@ -535,9 +526,8 @@ object Dedup {
   def clustersFromPairs(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.DataFrame
     val spark = pairs.sparkSession
-    val edges = pairs.select(col("doc_x").as("s"), col("doc_y").as("d"))
-      .unionByName(pairs.select(col("doc_y").as("s"), col("doc_x").as("d")))
-      .localCheckpoint(true)
+    val edges = DfCache.cut(pairs.select(col("doc_x").as("s"), col("doc_y").as("d"))
+      .unionByName(pairs.select(col("doc_y").as("s"), col("doc_x").as("d"))), DfCache.Cut.Eager)
     // init = min over the CLOSED neighborhood (round-18): the old
     // own-id init spent its first loop round computing exactly this
     // aggregation — folding that propagation step into the init costs
@@ -549,23 +539,21 @@ object Dedup {
     // start, so the zero-change round still proves component-min
     // labels. Every vertex appears as a destination (edges are
     // symmetric), so the groupBy covers the whole vertex set.
-    var labels: DataFrame = edges
+    var labels: DataFrame = DfCache.cut(edges
       .groupBy(col("d"))
       .agg(least(min(col("s")), col("d")).as("lbl"))
-      .select(col("d").as("v"), col("lbl"))
-      .localCheckpoint(true)
+      .select(col("d").as("v"), col("lbl")), DfCache.Cut.Eager)
     var converged = false
     while (!converged) {
       // own-label rows tag `prev`; neighbor contributions leave it
       // null. Every vertex appears in `labels` exactly once, so
       // min(prev) ignoring nulls recovers the previous label.
-      val next = edges.join(labels.withColumnRenamed("v", "d"), Seq("d"))
+      val next = DfCache.cut(edges.join(labels.withColumnRenamed("v", "d"), Seq("d"))
         .select(col("s").as("v"), col("lbl"),
           lit(null).cast("long").as("prev"))
         .unionByName(labels.select(col("v"), col("lbl"),
           col("lbl").as("prev")))
-        .groupBy("v").agg(min("lbl").as("lbl"), min("prev").as("prev"))
-        .localCheckpoint(false)
+        .groupBy("v").agg(min("lbl").as("lbl"), min("prev").as("prev")), DfCache.Cut.Lazy)
       converged = next.where(col("lbl") < col("prev")).count() == 0L
       labels = next.select("v", "lbl")
     }
@@ -619,10 +607,10 @@ object Dedup {
     * Returns (per-vertex labels `(v, lbl)`, rounds taken).
     */
   def starComponents(pairs: DataFrame): (DataFrame, Int) = {
-    var edges = pairs
+    var edges = DfCache.cut(pairs
       .select(least(col("doc_x"), col("doc_y")).as("u"),
         greatest(col("doc_x"), col("doc_y")).as("v"))
-      .where(col("u") =!= col("v")).distinct().localCheckpoint(true)
+      .where(col("u") =!= col("v")).distinct(), DfCache.Cut.Eager)
     var edgeCount = edges.count()
     var rounds = 0
     var converged = edgeCount == 0L
@@ -643,13 +631,12 @@ object Dedup {
       // small-star: per node v, route its smaller neighbors (and v
       // itself) to their minimum. (m <= u < v throughout.)
       val smins = large.groupBy("v").agg(min("u").as("m"))
-      val small = large.join(smins, Seq("v"))
+      val small = DfCache.cut(large.join(smins, Seq("v"))
         .where(col("m") =!= col("u"))
         .select(col("m").as("u"), col("u").as("v"))
         .unionByName(smins.select(col("m").as("u"), col("v")))
         .where(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(false)
+        .distinct(), DfCache.Cut.Lazy)
       // fixpoint: the canonical edge set survived the round unchanged
       // (count equality + one-sided difference = set equality). The
       // count is the action materializing the lazy checkpoint.
@@ -778,8 +765,7 @@ object Dedup {
     // collect_set drops null texts — a null row adds no shingles, so
     // {null, "A"} and {"A"} correctly share a key; all-null docs
     // share md5("") and are excluded below by the empty-shingle rule.
-    val groups = DfCache.getOrPersist(spark, s"doc_exact_groups:$dir",
-        Seq(s"$dir/documents.parquet")) {
+    val groups = DfCache.getOrPersist(spark, s"doc_exact_groups:$dir") {
       d.groupBy("doc_id")
         .agg(md5(concat_ws("|",
           sort_array(collect_set(md5(col("text").cast("binary")))))
@@ -793,11 +779,9 @@ object Dedup {
       Seq("doc_id"), "left_semi")
     // representatives-only shingle lineage: consumed by banding, both
     // verification joins, the size frame, and the nonempty-set rule.
-    val repSh = DfCache.getOrPersist(spark, s"doc_shingles_reps:$dir",
-      Seq(s"$dir/documents.parquet"))(shinglesOf(repDocs))
+    val repSh = DfCache.getOrPersist(spark, s"doc_shingles_reps:$dir")(shinglesOf(repDocs))
     val repSizes = repSh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val b = DfCache.getOrPersist(spark, s"doc_bands_reps:$dir",
-      Seq(s"$dir/documents.parquet"))(bandsOfShingles(repSh))
+    val b = DfCache.getOrPersist(spark, s"doc_bands_reps:$dir")(bandsOfShingles(repSh))
     val cand = b.select(col("doc_id").as("doc_x"), col("band_id"), col("bh"))
       .join(b.select(col("doc_id").as("doc_y"), col("band_id"), col("bh")),
         Seq("band_id", "bh"))
@@ -936,8 +920,7 @@ object Dedup {
     * [[simhashPairs]]' band self-join consume it.
     */
   def simhashHalves(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"doc_simhash:$dir",
-      Seq(s"$dir/documents.parquet")) {
+    DfCache.getOrPersist(spark, s"doc_simhash:$dir") {
       val sums =
         (0 until 32).map(b =>
           sum(when(shiftright(col("h_lo"), b) % 2 === 1, 1).otherwise(-1)).as(s"lo$b")) ++
@@ -982,8 +965,7 @@ object Dedup {
     // already persisted — and its output is bounded by band-collision
     // pairs. The hamming verification and ordering stay
     // per-invocation.
-    val cand = DfCache.getOrPersist(spark, s"simhash_cands:$dir",
-      Seq(s"$dir/documents.parquet"))(
+    val cand = DfCache.getOrPersist(spark, s"simhash_cands:$dir")(
       bands.select(col("doc_id").as("doc_x"), col("sim_lo").as("lo_x"),
           col("sim_hi").as("hi_x"), col("band_ix"), col("band_v"))
         .join(bands.select(col("doc_id").as("doc_y"), col("sim_lo").as("lo_y"),
@@ -1102,8 +1084,7 @@ object Dedup {
     // emits nothing for short docs — no `.where`, no duplicated
     // clean lineage in a pushed-down filter.
     val parts = (0 until n).map(j => s"try_element_at(t, i + $j)").mkString(", ")
-    DfCache.getOrPersist(spark, s"doc_spans:$n:$dir",
-      Seq(s"$dir/documents.parquet")) {
+    DfCache.getOrPersist(spark, s"doc_spans:$n:$dir") {
       base
         .select(col("doc_id"), explode(expr(
           graft.functions.Tokenize.windowedSql("t", n,
@@ -1218,8 +1199,7 @@ object Dedup {
     // the persist the corpus-scale shingle distinct runs twice per
     // query (round-8 self-review finding). Bounded by
     // |sources| x |shingle vocabulary|.
-    val srcSh = DfCache.getOrPersist(spark, s"src_shingles:$dir",
-      Seq(s"$dir/documents.parquet"))(
+    val srcSh = DfCache.getOrPersist(spark, s"src_shingles:$dir")(
       shingles(spark, dir)
         .join(docs(spark, dir).select(col("doc_id"), col("source")), Seq("doc_id"))
         .select(col("source"), col("s")).distinct())
@@ -1235,10 +1215,7 @@ object Dedup {
       .where(col("source_a") < col("source_b"))
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_shared"))
-    val pairs = DfCache.getOrPersist(spark,
-      s"srcpairs:${pairs0.semanticHash()}", Seq(s"$dir/documents.parquet"))(
-      pairs0)
-    pairs
+    DfCache.getOrPersist(spark, s"srcpairs:${pairs0.semanticHash()}")(pairs0)
       .join(broadcast(sizes.select(col("source").as("source_a"), col("n").as("n_a"))),
         Seq("source_a"))
       .join(broadcast(sizes.select(col("source").as("source_b"), col("n").as("n_b"))),

@@ -97,8 +97,7 @@ object Hybrid {
       .where(col("doc_id") =!= qid)
       .withColumn("rank_text", row_number().over(w).cast("long"))
       .where(col("rank_text") <= kCand)
-      .select(col("doc_id"), col("rank_text")),
-      Seq(s"$dir/documents.parquet"))
+      .select(col("doc_id"), col("rank_text")))
   }
 
   /** Session persist for a BOUNDED tower candidate pool (round-18
@@ -114,9 +113,8 @@ object Hybrid {
     * pool: its probe frames are external per-batch inputs, not
     * session-stable lineages.
     */
-  private def hybridPool(df: DataFrame, upstreams: Seq[String]): DataFrame =
-    graft.sources.DfCache.getOrPersist(df.sparkSession,
-      s"hybridpool:${df.semanticHash()}", upstreams)(df)
+  private def hybridPool(df: DataFrame): DataFrame =
+    graft.sources.DfCache.getOrPersist(df.sparkSession, s"hybridpool:${df.semanticHash()}")(df)
 
   /** The single-fusion query document's id — the SAME selection rule
     * as the BM25 query source (`bm25Core`: the minimum doc_id), so
@@ -135,15 +133,14 @@ object Hybrid {
   // hybrid queries fire this footer-stats driver job per invocation;
   // the id is a pure function of the documents dataset, so one
   // lookup per (session, corpus) suffices. Memoized through
-  // [[graft.sources.DfCache.memo]] with the documents path registered
-  // (round-18): a private map here bypassed the artifact gate's
-  // invalidateDerived, so an in-session rewrite of documents.parquet
-  // served a stale query-doc id (round-17 verdict #4).
+  // [[graft.sources.DfCache.memo]] over the documents read, which the
+  // memo derives as its source: a private map here bypassed the
+  // artifact gate's invalidateDerived, so an in-session rewrite of
+  // documents.parquet served a stale query-doc id (round-17 verdict #4).
   private def queryDocId(spark: SparkSession, dir: String): Long =
-    graft.sources.DfCache.memo(spark, s"hybrid-qid:$dir",
-        Seq(s"$dir/documents.parquet")) {
-      val r = spark.read.parquet(s"$dir/documents.parquet")
-        .agg(min(col("doc_id"))).head()
+    graft.sources.DfCache.memo(spark, s"hybrid-qid:$dir")(
+        spark.read.parquet(s"$dir/documents.parquet")) { docs =>
+      val r = docs.agg(min(col("doc_id"))).head()
       // EMPTY corpus: there is no query document — use a sentinel id
       // no corpus row carries, so both towers run their normal
       // (empty) plans and the fusion is an empty frame with the
@@ -167,8 +164,7 @@ object Hybrid {
     // (round-9 review). Degrades to the base path with no deltas.
     hybridPool(
       Similarity.cosineTopKAggWhereLive(spark, dir, kCand, col("vec_id") === qid)
-        .select(col("vec_id").as("doc_id"), col("rank").as("rank_vec")),
-      Seq(s"$dir/embeddings.parquet"))
+        .select(col("vec_id").as("doc_id"), col("rank").as("rank_vec")))
 
   /** `search_hybrid_rrf`: the registered hybrid query — RRF fusion
     * of the two towers, top `k`.
@@ -196,8 +192,7 @@ object Hybrid {
     hybridPool(
       Similarity.ivfTopKAggForLive(spark, dir, qid, kCand,
           Similarity.autoCents(spark, dir))
-        .select(col("vec_id").as("doc_id"), col("rank").as("rank_vec")),
-      Seq(s"$dir/embeddings.parquet"))
+        .select(col("vec_id").as("doc_id"), col("rank").as("rank_vec")))
 
   /** `search_hybrid_rrf_ivf`: the hybrid query with the IVF vector
     * tower — what the fusion runs at 100 TB, where brute-force
@@ -240,8 +235,7 @@ object Hybrid {
       .where(col("doc_id") =!= col("probe_id"))
       .withColumn("rank_text", row_number().over(w).cast("long"))
       .where(col("rank_text") <= kCand)
-      .select(col("probe_id"), col("doc_id"), col("rank_text")),
-      Seq(s"$dir/documents.parquet"))
+      .select(col("probe_id"), col("doc_id"), col("rank_text")))
   }
 
   /** Batched vector tower: the bounded TopK aggregator with the
@@ -255,8 +249,7 @@ object Hybrid {
     hybridPool(Similarity.cosineTopKAggWhereLive(spark, dir, kCand,
       col("vec_id").isin(probeIds: _*))
       .select(col("qid").as("probe_id"), col("vec_id").as("doc_id"),
-        col("rank").as("rank_vec")),
-      Seq(s"$dir/embeddings.parquet"))
+        col("rank").as("rank_vec")))
 
   /** [[rrfFuse]] keyed by (probe_id, doc_id): per-probe fusion and
     * ranking in one frame.

@@ -158,8 +158,8 @@ object JoinSearch {
     * broadcasts collect anyway; sorted, so one query keeps one plan.
     */
   private def queryKeys(maps: DataFrame, mapsHash: Int): Seq[String] =
-    graft.sources.DfCache.memo(maps.sparkSession, s"qkeys:$mapsHash") {
-      maps.select("key").collect().flatMap(r => Option(r.getString(0)))
+    graft.sources.DfCache.memo(maps.sparkSession, s"qkeys:$mapsHash")(maps) {
+      _.select("key").collect().flatMap(r => Option(r.getString(0)))
         .distinct.sorted.toSeq
     }
 
@@ -353,8 +353,7 @@ object JoinSearch {
     */
   def indexKeyStats(index: DataFrame): DataFrame = {
     import graft.sources.DfCache
-    DfCache.getOrPersist(index.sparkSession,
-      s"idxstats:${index.semanticHash()}")(
+    DfCache.getOrPersist(index.sparkSession, s"idxstats:${index.semanticHash()}")(
       index.groupBy("key").agg(count(lit(1)).as("kdf")))
   }
 
@@ -486,8 +485,7 @@ object JoinSearch {
     // this chain WAS the warm path: the measured per-invocation cost
     // is stage-launch latency, not data. Same small-query contract as
     // the qmaps persist it derives from.
-    graft.sources.DfCache.getOrPersist(maps.sparkSession,
-      s"anchors:${a.semanticHash()}")(a)
+    graft.sources.DfCache.getOrPersist(maps.sparkSession, s"anchors:${a.semanticHash()}")(a)
   }
 
   private def conjunctionFromRowKeys(rowKeys: DataFrame, anchors: DataFrame,
@@ -654,8 +652,8 @@ object JoinSearch {
       s"colscores:${idx.semanticHash()}:$mapsHash") {
       // coalesce after the detach: a detached frame reports no output
       // partitioning, and the warm tail needs the one partition known
-      org.apache.spark.sql.graftx.Bridge.detach(
-        columnScoresFill(idx, m, mapsHash, cols.size)).coalesce(1)
+      graft.sources.DfCache.cut(columnScoresFill(idx, m, mapsHash, cols.size),
+        graft.sources.DfCache.Cut.Detach).coalesce(1)
     }
   }
 
@@ -1045,8 +1043,8 @@ object JoinSearch {
   def prunedTableIds(sketch: DataFrame, maps: DataFrame, colCount: Int): Seq[Int] = {
     val verdict = prunedTables(sketch, maps, colCount)
     graft.sources.DfCache.memo(sketch.sparkSession,
-        s"prunedids:${verdict.semanticHash()}") {
-      verdict.collect().map(_.getAs[Number]("table_id").intValue).toSeq.sorted
+        s"prunedids:${verdict.semanticHash()}")(verdict) {
+      _.collect().map(_.getAs[Number]("table_id").intValue).toSeq.sorted
     }
   }
 }

@@ -287,8 +287,7 @@ object Multimodal {
   private def cachedHashes(spark: SparkSession, dir: String, variant: String,
       codec: Codec, mediaDf: => DataFrame): DataFrame = {
     import graft.sources.DfCache
-    DfCache.getOrPersist(spark,
-      s"mm_dhash:$variant:$dir:${codec.getClass.getName}")(
+    DfCache.getOrPersist(spark, s"mm_dhash:$variant:$dir:${codec.getClass.getName}")(
       dhashOf(lumaGrids(mediaDf, codec)))
   }
 

@@ -89,8 +89,7 @@ object Similarity {
     * invariant true by construction instead of by dataset luck.
     */
   def quantized(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"emb_quant:$dir",
-      Seq(s"$dir/embeddings.parquet")) {
+    DfCache.getOrPersist(spark, s"emb_quant:$dir") {
       spark.read.parquet(s"$dir/embeddings.parquet")
         .where(admissibleVector &&
           expr("exists(embedding, x -> x != cast(0.0 as float))"))
@@ -145,8 +144,7 @@ object Similarity {
     // scan runs once per (session, k, probeMod). orderBy applied
     // OUTSIDE the persist: ordering is not a property a cached
     // relation is contracted to preserve.
-    val picked = DfCache.getOrPersist(spark,
-      s"cos-exact:$dir:$k:$probeMod", Seq(s"$dir/embeddings.parquet")) {
+    val picked = DfCache.getOrPersist(spark, s"cos-exact:$dir:$k:$probeMod") {
       val base = quantized(spark, dir)
       val probes = base.where(col("vec_id") % probeMod === 0)
         .select(col("vec_id").as("qid"), col("q").as("pq"), col("nq").as("pnq"))
@@ -176,8 +174,7 @@ object Similarity {
     * Persisted: both sides of the candidate self-join consume it.
     */
   def signBands(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"emb_bands:$dir",
-      Seq(s"$dir/embeddings.parquet")) {
+    DfCache.getOrPersist(spark, s"emb_bands:$dir") {
       val bandStructs = (0 until NumBands).map { b =>
         val v = (0 until BandBits).map(j =>
           when(element_at(col("q"), b * BandBits + j + 1) >= 0, lit(1L << j))
@@ -482,8 +479,7 @@ object Similarity {
     // scoring pass runs twice per query (round-8 self-review
     // finding). The frame is bounded (|probes| * kCand rows).
     val cands = graft.sources.DfCache.getOrPersist(spark,
-      s"sim_diverse_cands:$dir:$kCand:$probeMod",
-      Seq(s"$dir/embeddings.parquet"))(
+      s"sim_diverse_cands:$dir:$kCand:$probeMod")(
       cosineTopKAggWhere(spark, dir, kCand,
         col("vec_id") % probeMod === 0))
     val labels = loadOrBuildEmbClusters(spark, dir, minCosBp)
@@ -1165,9 +1161,7 @@ object Similarity {
     // the codes read + (vec_id) shuffle per call. Keyed by corpus +
     // book size, gated on the embeddings source like the other ANN
     // lineages.
-    graft.sources.DfCache.getOrPersist(spark,
-      s"pq_codes_packed:$dir:$numCents",
-      Seq(s"$dir/embeddings.parquet")) {
+    graft.sources.DfCache.getOrPersist(spark, s"pq_codes_packed:$dir:$numCents") {
       val dense = pqDenseIds(pqCodebook(spark, dir, numCents))
         .select(col("m"), col("cent_id").as("code"), col("lidx"))
       pqCodes(spark, dir, numCents)
@@ -1227,9 +1221,7 @@ object Similarity {
     // (rareSharedCandidates precedent). The exact re-rank + ranking
     // below stays per-invocation work. Book access sits INSIDE the
     // closure so a warm hit pays no artifact-gate listing.
-    val pool = DfCache.getOrPersist(spark,
-      s"pq-pool:$dir:$numCents:$probeMod:$rerank",
-      Seq(s"$dir/embeddings.parquet")) {
+    val pool = DfCache.getOrPersist(spark, s"pq-pool:$dir:$numCents:$probeMod:$rerank") {
       val book = pqCodebook(spark, dir, numCents)
       val lutp = pqLutPacked(probes, book)
       val adcScored = pqCodesPacked(spark, dir, numCents)
@@ -1334,8 +1326,7 @@ object Similarity {
     // [[pqTopK]]'s pool). The exact re-rank below stays
     // per-invocation work.
     val pool = DfCache.getOrPersist(spark,
-      s"ivfpq-pool:$dir:$numCents:$nprobe:$numPqCents:$probeMod:$rerank",
-      Seq(s"$dir/embeddings.parquet")) {
+      s"ivfpq-pool:$dir:$numCents:$nprobe:$numPqCents:$probeMod:$rerank") {
       val cells = ivfCells(spark, dir, numCents)
       val cents = broadcast(ivfCodebook(spark, dir, numCents)
         .select(col("cent_id"), col("cq"), col("cnq")))

@@ -48,8 +48,7 @@ object SqlSearch {
     // which re-ran the scan + clean + distinct lineage per
     // invocation. Same small-query contract as preparedMappings.
     val qclean0 = graft.operators.JoinSearch.prepareInput(query, cols)
-    graft.sources.DfCache.getOrPersist(spark,
-        s"qclean:${qclean0.semanticHash()}")(qclean0)
+    graft.sources.DfCache.getOrPersist(spark, s"qclean:${qclean0.semanticHash()}")(qclean0)
       .createOrReplaceTempView(qcleanView)
     try searchSql(spark, idxView, qcleanView, cols, maxTables)
     finally {

@@ -69,8 +69,7 @@ object TextAnalysis {
     * the scan + two cleaning passes.
     */
   def stats(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"doc_stats:$dir",
-      Seq(s"$dir/documents.parquet"))(statsUncached(spark, dir))
+    DfCache.getOrPersist(spark, s"doc_stats:$dir")(statsUncached(spark, dir))
 
   private def statsUncached(spark: SparkSession, dir: String): DataFrame =
     // spread the narrow doc rows first: the stats projection is five
@@ -340,8 +339,7 @@ object TextAnalysis {
     * terms (count-then-filter = filter-then-count on an equi-key).
     */
   private def termCounts(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"doc_tf:$dir",
-      Seq(s"$dir/documents.parquet")) {
+    DfCache.getOrPersist(spark, s"doc_tf:$dir") {
       // doc_id-clustered (round-18, the IndexBuilder.cached (t,r)
       // arrangement applied to the documents analog): the spread
       // repartition doubles as the aggregation's exchange —
@@ -364,8 +362,7 @@ object TextAnalysis {
     // (round-18): without its own persist each invocation re-ran the
     // full-vocabulary aggregation over tf before broadcasting the
     // same |vocabulary|-sized frame. Same altitude as [[termCounts]].
-    val dfc = DfCache.getOrPersist(spark, s"doc_df:$dir",
-      Seq(s"$dir/documents.parquet")) {
+    val dfc = DfCache.getOrPersist(spark, s"doc_df:$dir") {
       termCounts(spark, dir).groupBy("term").agg(count(lit(1)).as("df"))
     }
     val total = docs(spark, dir).agg(count(lit(1)).as("n_docs"))
@@ -428,8 +425,7 @@ object TextAnalysis {
     // corpus for its minimum-doc_id row per invocation; persisted per
     // (session, corpus, qTerms) it costs one limit-1 scan per session
     // (round-18).
-    val qterms = DfCache.getOrPersist(spark, s"bm25_qterms:$dir:$qTerms",
-      Seq(s"$dir/documents.parquet"))(
+    val qterms = DfCache.getOrPersist(spark, s"bm25_qterms:$dir:$qTerms")(
       bm25QueryTerms(docs(spark, dir), qTerms))
     val tf = termCounts(spark, dir).join(broadcast(qterms), Seq("term"))
       .select("doc_id", "term", "tf")
@@ -455,8 +451,7 @@ object TextAnalysis {
     // scoring path ([[bm25TopK]], [[bm25ScoresForTerms]]) — persisted
     // per (session, corpus) the identity aggregation over the stats
     // frame runs once, not per invocation (round-18).
-    DfCache.getOrPersist(spark, s"doc_dl:$dir",
-      Seq(s"$dir/documents.parquet")) {
+    DfCache.getOrPersist(spark, s"doc_dl:$dir") {
       stats(spark, dir).groupBy("doc_id")
         .agg(sum("n_clean_tokens").cast("long").as("dl"))
         .where(col("dl") > 0)
@@ -1028,8 +1023,7 @@ object TextAnalysis {
     // reusable across the extra aggregation). Same altitude as the
     // [[termCounts]] / session-index persists: one (doc, gram)
     // count row per distinct pair, MEMORY_AND_DISK.
-    val tf = DfCache.getOrPersist(spark, s"doc_bigram_tf:$dir",
-      Seq(s"$dir/documents.parquet")) {
+    val tf = DfCache.getOrPersist(spark, s"doc_bigram_tf:$dir") {
       // doc_id-clustered like [[termCounts]] (round-18): hash(doc_id)
       // is the aggregation's exchange AND the reported partitioning,
       // so the per-doc rollup below aggregates in place.
@@ -1045,8 +1039,7 @@ object TextAnalysis {
     // [[tfidfTop]]'s vocabulary df persist (round-18): query-
     // independent, bigram-vocabulary-sized, re-aggregated per
     // invocation without it.
-    val freq = DfCache.getOrPersist(spark, s"doc_bigram_freq:$dir",
-      Seq(s"$dir/documents.parquet"))(
+    val freq = DfCache.getOrPersist(spark, s"doc_bigram_freq:$dir")(
       tf.groupBy("g").agg(sum(col("tf")).as("freq")))
     tf.join(freq, Seq("g"))
       .groupBy("doc_id")

@@ -345,6 +345,7 @@ object Artifacts {
       upstreamPaths: Seq[String], semantics: String)(
       build: String => Unit)(read: String => DataFrame): DataFrame =
     lockFor(artifactPath).synchronized {
+      DfCache.recordArtifact(spark, artifactPath, upstreamPaths)
       val root = new Path(artifactPath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       def currentFp: String =
@@ -421,6 +422,7 @@ object Artifacts {
       upstreamPaths: Seq[String], semantics: String)(
       build: String => Unit): String =
     lockFor(artifactPath).synchronized {
+      DfCache.recordArtifact(spark, artifactPath, upstreamPaths)
       val root = new Path(artifactPath)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       publishLocked(spark, root, fs, upstreamPaths, semantics)(build)
@@ -482,7 +484,9 @@ object Artifacts {
     // Session lineages cached from the superseded source/version must
     // not feed the rebuild, or the artifact would carry stale frames
     // under the fresh fingerprint — permanently, since every later
-    // session would see fingerprint-match and serve it.
+    // session would see fingerprint-match and serve it. Entries derive
+    // their sources through the gates' records, so this also drops an
+    // entry that reads an upstream through another artifact.
     DfCache.invalidateDerived(spark, upstreamPaths)
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = new Path(root, s".build-${java.util.UUID.randomUUID}")
@@ -537,7 +541,9 @@ object Artifacts {
     // for its whole middle by top-level mtime — while its task files
     // keep landing with fresh stamps. The walk is bounded (one temp
     // build's parts); a dir that vanishes mid-walk was a concurrent
-    // publisher's — treated as fresh, never swept from here.
+    // publisher's — treated as fresh, never swept from here. Any
+    // other listing failure is logged with its path and also treated
+    // as fresh: a sweep deletes only what it could prove stale.
     val now = System.currentTimeMillis()
     def newestInside(p: Path, top: Long): Long =
       try {
@@ -547,11 +553,11 @@ object Artifacts {
           newest = math.max(newest, it.next().getModificationTime)
         newest
       } catch {
-        // NonFatal, not just IOException: the local FS surfaces a
-        // file vanishing mid-walk (a concurrent publisher swept or
-        // committed this dir) as a RuntimeException from its
-        // permission loader.
-        case scala.util.control.NonFatal(_) => Long.MaxValue
+        case _: java.io.FileNotFoundException => Long.MaxValue
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] WARN Artifacts: cannot list $p to " +
+            s"judge its age; kept as fresh: $e")
+          Long.MaxValue
       }
     val after = versionDirs(fs, root)
     val prevServed = after.filter(_._1 < publishedId).reverse

@@ -285,13 +285,9 @@ object IndexBuilder {
     * pruned batches for the search family's per-query shuffle.
     */
   def cached(spark: SparkSession, dir: String): DataFrame =
-    // registered against the snapshot root AND the corpus tables: the
-    // snapshot gate invalidates derived lineages by its UPSTREAM set
-    // (the corpus paths) when it rebuilds, so a corpus rewritten
-    // in-session must drop this entry too — its lineage points at the
-    // superseded version dir.
-    DfCache.getOrPersist(spark, s"index:$dir",
-      snapshotPath(dir) +: corpusPaths(dir))(
+    // the derived sources reach the corpus tables through the snapshot
+    // gate's record, so a corpus rewritten in-session drops this entry
+    DfCache.getOrPersist(spark, s"index:$dir")(
       loadOrSnapshot(spark, dir)
         .repartition(col("table_id"), col("row_id")))
 
@@ -348,26 +344,18 @@ object IndexBuilder {
         .write.mode("overwrite").parquet(t)
     }
 
-  /** Session-persisted reads of the two thin snapshot companions
-    * (round-17 optimization): the partition-pruned search family
-    * calls `loadOrBuild{KeyStats,TableSketch}` on EVERY query, and
-    * each call re-pays the versioned gate's freshness probe (a
-    * recursive content listing of the snapshot — the documented
-    * "~10 LISTs on an object store" cost) plus parquet read planning,
-    * for artifacts that are metadata-sized. These wrap the same gate
-    * in the same once-per-session amortization [[cached]] already
-    * gives the snapshot itself, registered against the snapshot root
-    * + corpus paths so an in-session rebuild still invalidates
-    * ([[DfCache.invalidateDerived]] — the gate drops derived
-    * lineages before rebuilding).
+  /** Session-persisted reads of the two thin snapshot companions:
+    * the partition-pruned search family would otherwise re-pay the
+    * versioned gate's freshness probe (a recursive listing of the
+    * snapshot) on every query, for metadata-sized artifacts. Each
+    * entry's derived sources reach the snapshot and the corpus through
+    * the gates' records, so an in-session rebuild still drops it.
     */
   def cachedKeyStats(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"keystats-artifact:$dir",
-      snapshotPath(dir) +: corpusPaths(dir))(loadOrBuildKeyStats(spark, dir))
+    DfCache.getOrPersist(spark, s"keystats-artifact:$dir")(loadOrBuildKeyStats(spark, dir))
 
   def cachedTableSketch(spark: SparkSession, dir: String): DataFrame =
-    DfCache.getOrPersist(spark, s"sketch-artifact:$dir",
-      snapshotPath(dir) +: corpusPaths(dir))(loadOrBuildTableSketch(spark, dir))
+    DfCache.getOrPersist(spark, s"sketch-artifact:$dir")(loadOrBuildTableSketch(spark, dir))
 
   /** Shared staleness gate for snapshot-companion artifacts: rebuild
     * whenever the snapshot's content listing changed since the

@@ -106,7 +106,7 @@ class AdvFileSystem extends RawLocalFileSystem {
     * freshness.
     */
   override def listStatus(f: Path): Array[FileStatus] = {
-    val all = super.listStatus(f)
+    val all = super.listStatus(f).map(AdvFileSystem.plain)
     val lag = AdvFileSystem.lagMs
     // `_temporary` is the Hadoop committer's staging namespace —
     // lagging ITS listings models the data-plane committer, not the
@@ -172,6 +172,17 @@ class AdvFileSystem extends RawLocalFileSystem {
 }
 
 object AdvFileSystem {
+
+  /** `st` without its lazily-loaded permissions. The local file
+    * system's own statuses load permission, owner and group on first
+    * access through a `java.io.File` of the path, which rejects an
+    * `advfs:` URI; building a `LocatedFileStatus` reads all three, so
+    * `listFiles(path, recursive = true)` failed on this scheme. An
+    * object store has no POSIX permissions to report anyway.
+    */
+  private[graft] def plain(st: FileStatus): FileStatus =
+    new FileStatus(st.getLen, st.isDirectory, st.getReplication,
+      st.getBlockSize, st.getModificationTime, st.getPath)
 
   private[graft] val AdvUri = URI.create("advfs:///")
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.spark.sql.DataFrame
+
 import graft.operators.JoinSearch
 import graft.sources.IndexBuilder
 
@@ -144,8 +146,9 @@ class ArtifactStalenessSpec extends SparkTestBase {
     // with half the tables dropped — values change, not just part
     // names (round-9 review: the first cut of the invalidation gate
     // keyed on source-file basenames and missed the snapshot-derived
-    // `index:` family entirely; upstreams are now registered at the
-    // getOrPersist call site).
+    // `index:` family entirely; each entry's sources are now derived
+    // from its own plan, through the snapshot gate's record of its
+    // upstreams).
     val pruned = IndexBuilder.cached(spark, dir)
       .where(col("table_id") % 2 === 0).localCheckpoint(true)
     IndexBuilder.publishSnapshot(spark, dir, pruned)
@@ -158,6 +161,48 @@ class ArtifactStalenessSpec extends SparkTestBase {
       .map(_.getAs[Number]("table_id").intValue).toSet
     assert(ids.nonEmpty && ids.forall(_ % 2 == 0),
       s"rebuilt sketch reflects the pre-swap snapshot: $ids")
+  }
+
+  /** Warms `search` on an isolated corpus, rewrites `customer.parquet`
+    * in the session so every odd customer's segment becomes
+    * `AUTOMOBILE` (a value none of the query rows had, so the query's
+    * key list changes), runs the snapshot gate, and asks again: the
+    * answer must equal the cache-free shuffled search over the rebuilt
+    * snapshot. A memo of the query's old key list that survived the
+    * gate would probe for the old keys only and drop every odd row.
+    */
+  private def answersAfterQueryTableRewrite(
+      search: (String, DataFrame) => DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    val dir = isolatedCorpus()
+    def query = Queries.customerQuery(spark, dir)
+    def answer = search(dir, query).collect().toSeq
+    val warm = answer
+    assert(warm.nonEmpty && answer == warm)
+    val src = s"$dir/customer.parquet"
+    spark.read.parquet(src)
+      .withColumn("c_mktsegment",
+        when(col("c_custkey") % 2 === 1, lit("AUTOMOBILE")).otherwise(col("c_mktsegment")))
+      .localCheckpoint(true)
+      .write.mode("overwrite").parquet(src)
+    val rebuilt = IndexBuilder.loadOrSnapshot(spark, dir)
+    val expected = JoinSearch.searchTablesShuffled(rebuilt, query, Queries.customerCols)
+      .collect().toSeq
+    assert(answer == expected, "a search served a cache entry derived from the superseded table")
+  }
+
+  test("a search after an in-session rewrite of its query table answers from the new table") {
+    answersAfterQueryTableRewrite { (dir, query) =>
+      JoinSearch.searchTables(IndexBuilder.cached(spark, dir), query, Queries.customerCols)
+    }
+  }
+
+  test("a sketch-pruned search on the by-table snapshot answers from the rewritten query table") {
+    answersAfterQueryTableRewrite { (dir, query) =>
+      JoinSearch.searchTables(IndexBuilder.loadOrSnapshotPartitioned(spark, dir), query,
+        Queries.customerCols,
+        narrow = JoinSearch.Narrow.Sketch(IndexBuilder.cachedTableSketch(spark, dir)))
+    }
   }
 
   test("a warm session cache cannot poison a rebuilt documents artifact") {

@@ -126,6 +126,22 @@ class ConventionSpec extends AnyFunSuite {
         found.toSeq.sortBy(_._1).mkString("\n  ", "\n  ", "\n"))
   }
 
+  test("every lineage cut in main source goes through DfCache.cut") {
+    val cutCall = "(?<![A-Za-z_])(?:localCheckpoint|checkpoint)\\(|Bridge\\.detach\\(".r
+    val found = Files.walk(mainSrc).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !p.endsWith(Paths.get("graft/sources/DfCache.scala")))
+      .map(p => mainSrc.relativize(p).toString -> countIn(codeLines(p), cutCall))
+      .filter(_._2 > 0).toMap
+    assert(found.isEmpty,
+      "\nlineage cuts outside DfCache.cut: a cut frame's plan scans an RDD " +
+        "that names no file, so the session cache cannot derive the sources " +
+        "behind it, and rewriting those sources would not drop the entries " +
+        "built over the cut. Route each through DfCache.cut, which records " +
+        "the pre-cut frame's sources.\nFound: " +
+        found.toSeq.sortBy(_._1).mkString("\n  ", "\n  ", "\n"))
+  }
+
   test("README query counts equal the registry (no hand-maintained doc rot)") {
     // round-11 flagged 181-vs-182, round 12 fixed it by hand and then
     // re-rotted to 182-vs-185 (round-12 verdict "what's wrong" #1) —

@@ -73,8 +73,7 @@ class DedupCollapseSpec extends SparkTestBase {
     assert(c.filter(_._4 == 1L).map(_._1) == Seq(0L))
     // structural: the persisted reps-only shingle lineage holds the 3
     // representatives (one per distinct text), not the 52 docs.
-    val repIds = DfCache.getOrPersist(spark, s"doc_shingles_reps:$d",
-        Seq(s"$d/documents.parquet"))(
+    val repIds = DfCache.getOrPersist(spark, s"doc_shingles_reps:$d")(
         sys.error("lineage was not persisted by the collapse"))
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(repIds == Set(0L, 900L, 901L))

@@ -15,29 +15,67 @@ import graft.sources.DfCache
   */
 class DfCacheSpec extends SparkTestBase {
 
+  /** A real one-row parquet dataset under a fresh temp dir: entries
+    * derive their sources from the plans they read, so a memo must
+    * read a real file to register against it.
+    */
+  private def parquet(name: String): String = {
+    val path = java.nio.file.Files.createTempDirectory("dfcspec").resolve(name).toString
+    spark.range(1).write.parquet(path)
+    path
+  }
+
   test("memo computes once per (session, key)") {
     val n = new AtomicInteger(0)
-    def get() = DfCache.memo(spark, "dfcspec-m1:x",
-      Seq("/up/a.parquet")) { n.incrementAndGet(); 42L }
+    val up = parquet("a.parquet")
+    def get() = DfCache.memo(spark, "dfcspec-m1:x")(spark.read.parquet(up)) { _ =>
+      n.incrementAndGet(); 42L
+    }
     assert(get() == 42L && get() == 42L && n.get() == 1)
   }
 
   test("invalidateDerived drops memos registered on the rewritten upstream") {
     val n = new AtomicInteger(0)
-    def get() = DfCache.memo(spark, "dfcspec-m2:x",
-      Seq("/up/docs.parquet")) { n.incrementAndGet() }
+    val docs = parquet("docs.parquet")
+    val other = parquet("other.parquet")
+    def get() = DfCache.memo(spark, "dfcspec-m2:x")(spark.read.parquet(docs)) { _ =>
+      n.incrementAndGet()
+    }
     assert(get() == 1)
     // unrelated upstream: memo survives.
-    DfCache.invalidateDerived(spark, Seq("/up/other.parquet"))
+    DfCache.invalidateDerived(spark, Seq(other))
     assert(get() == 1)
     // the registered upstream was rewritten: memo recomputes.
-    DfCache.invalidateDerived(spark, Seq("/up/docs.parquet"))
+    DfCache.invalidateDerived(spark, Seq(docs))
     assert(get() == 2)
+  }
+
+  test("a source read through a lineage cut or an artifact still drops the entry") {
+    val docs = parquet("docs.parquet")
+    val n = new AtomicInteger(0)
+    def overCut() = DfCache.memo(spark, "dfcspec-cut:x")(
+        DfCache.cut(spark.read.parquet(docs), DfCache.Cut.Eager)) { _ =>
+      n.incrementAndGet()
+    }
+    assert(overCut() == 1)
+    DfCache.invalidateDerived(spark, Seq(docs))
+    assert(overCut() == 2, "a cut hid its pre-cut source")
+    // an artifact built from docs: its version dir adds the gate's upstreams
+    val root = java.nio.file.Files.createTempDirectory("dfcspec-art").resolve("a").toString
+    def overArtifact() = DfCache.memo(spark, "dfcspec-art:x")(
+        graft.sources.Artifacts.loadOrBuild(spark, root, Seq(docs), "dfcspec")(
+          t => spark.read.parquet(docs).write.parquet(t))) { _ =>
+      n.incrementAndGet()
+    }
+    assert(overArtifact() == 3 && overArtifact() == 3)
+    DfCache.invalidateDerived(spark, Seq(docs))
+    assert(overArtifact() == 4, "an artifact read hid its gate's upstream")
   }
 
   test("invalidate(key) drops a memo by name") {
     val n = new AtomicInteger(0)
-    def get() = DfCache.memo(spark, "dfcspec-m3:x")(n.incrementAndGet())
+    def get() = DfCache.memo(spark, "dfcspec-m3:x")(spark.range(1).toDF())(_ =>
+      n.incrementAndGet())
     assert(get() == 1)
     DfCache.invalidate(spark, "dfcspec-m3:x")
     assert(get() == 2)
@@ -79,7 +117,7 @@ class DfCacheSpec extends SparkTestBase {
 
   test("a memo family holds at most familyCap entries, LRU evicted") {
     val builds = new AtomicInteger(0)
-    def get(i: Int) = DfCache.memo(spark, s"dfcspec-mlru:$i") {
+    def get(i: Int) = DfCache.memo(spark, s"dfcspec-mlru:$i")(spark.range(1).toDF()) { _ =>
       builds.incrementAndGet(); i
     }
     val cap = DfCache.familyCap

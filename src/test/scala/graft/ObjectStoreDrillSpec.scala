@@ -417,6 +417,32 @@ class ObjectStoreDrillSpec extends SparkTestBase {
     intercept[Artifacts.Unsettled](readLagged(600000L))
   }
 
+  test("a stray build older than the TTL on an object store is swept by the next publish") {
+    val (adv, local) = advTmp("graft-osd-stray")
+    val upstream = s"$local/up.parquet"
+    (1L to 10L).toDF("id").write.parquet(upstream)
+    val root = s"$adv/artifact"
+    def publishOnce(): Unit =
+      Artifacts.publish(spark, root, Seq(upstream), "drill-stray") { t =>
+        spark.read.parquet(upstream).write.parquet(t)
+      }
+    publishOnce()
+    // a crashed builder's leftovers: every file and dir inside the
+    // stray, and the stray itself, last touched past the TTL
+    val stray = new org.apache.hadoop.fs.Path(s"$root/.build-crashed")
+    val fs = stray.getFileSystem(conf)
+    val part = new org.apache.hadoop.fs.Path(stray, "_temporary/0/part-0")
+    val out = fs.create(part, true)
+    try out.write(Array[Byte](1, 2, 3)) finally out.close()
+    val old = System.currentTimeMillis() - Artifacts.BuildStrayTtlMs - 60000L
+    Seq(part, part.getParent, part.getParent.getParent, stray)
+      .foreach(fs.setTimes(_, old, -1L))
+    assert(Files.exists(Paths.get(s"$local/artifact/.build-crashed")))
+    publishOnce()
+    assert(!Files.exists(Paths.get(s"$local/artifact/.build-crashed")),
+      "a stray past the TTL survived the publish on an object store")
+  }
+
   test("heartbeat on an object store keeps a long hold from being stolen as stale") {
     val (adv, local) = advTmp("graft-osd-beat")
     val dd = s"$adv/delta"

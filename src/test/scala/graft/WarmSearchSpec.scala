@@ -102,10 +102,14 @@ class WarmSearchSpec extends SparkTestBase {
     * budget. A sketch narrowing's table list is memoized per verdict,
     * so its warm search is the tail alone (it was 2 jobs while the
     * list was collected on every call); a batch is its members'
-    * tails, unioned and sorted in the same job.
+    * tails, unioned and sorted in the same job. The registered search
+    * re-reads its query table on every call; the read's schema is
+    * memoized, so it adds no inference job (it was 2 jobs).
     */
   private val warmForms: Seq[(String, Int, () => DataFrame)] = Seq(
     ("search", 1, narrowed(JoinSearch.Narrow.All)),
+    ("registered search", 1,
+      () => SparkEntry.queries("search_customer_tables")(spark, sf0001)),
     ("df-capped search", 1, narrowed(JoinSearch.Narrow.DfCap(10000L))),
     ("fraction-capped search", 1,
       narrowed(JoinSearch.Narrow.DfCapFraction(JoinSearch.DefaultCapFractionBp))),
