@@ -484,8 +484,9 @@ object Artifacts {
     // Session lineages cached from the superseded source/version must
     // not feed the rebuild, or the artifact would carry stale frames
     // under the fresh fingerprint — permanently, since every later
-    // session would see fingerprint-match and serve it. Entries derive
-    // their sources through the gates' records, so this also drops an
+    // session would see fingerprint-match and serve it. The session's
+    // gate records (this gate's included, recorded above) widen the
+    // paths to every artifact built from them, so this also drops an
     // entry that reads an upstream through another artifact.
     DfCache.invalidateDerived(spark, upstreamPaths)
     val conf = spark.sparkContext.hadoopConfiguration

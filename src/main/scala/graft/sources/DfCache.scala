@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
+import scala.collection.concurrent.TrieMap
 
 /** Session-scoped cache of persisted DataFrames, keyed by a logical
   * name (e.g. `"index:<corpus dir>"`). Many registered queries share
@@ -51,13 +52,12 @@ object DfCache {
   private final class Store[V](evict: V => Unit) {
 
     private final class Entries {
-      val byKey = scala.collection.concurrent.TrieMap.empty[String, (V, Set[String])]
+      val byKey = TrieMap.empty[String, (V, Set[String])]
       // per-family recency, access-ordered; each guarded by its own
       // monitor (the TrieMap gives atomic get-or-create, the
       // LinkedHashMap needs external sync).
-      val recency = scala.collection.concurrent.TrieMap.empty[
-        String, java.util.LinkedHashMap[String, java.lang.Boolean]]
-      val buildLocks = scala.collection.concurrent.TrieMap.empty[String, AnyRef]
+      val recency = TrieMap.empty[String, java.util.LinkedHashMap[String, java.lang.Boolean]]
+      val buildLocks = TrieMap.empty[String, AnyRef]
     }
 
     private val sessions = java.util.Collections.synchronizedMap(
@@ -154,29 +154,34 @@ object DfCache {
   }
 
   /** Drop every session entry with a source equal to, or below, one
-    * of `paths` (qualified, compared path component by path
-    * component). The artifact gate ([[Artifacts]]) calls this before a
-    * rebuild: a cached lineage of the rewritten source would feed the
-    * rebuild stale frames, served forever under the fresh fingerprint.
-    * The next reader of a dropped entry recomputes it.
+    * of `paths` (qualified, compared path component by path component)
+    * or an artifact root this session's gates recorded as built from
+    * them, transitively. The gate ([[Artifacts]]) calls this before a
+    * rebuild, having recorded itself, so the result does not depend on
+    * the order the session first touched the artifacts in: a cached
+    * lineage of the rewritten source would feed the rebuild stale
+    * frames, served forever under the fresh fingerprint.
     */
   def invalidateDerived(spark: SparkSession, paths: Seq[String]): Unit = {
-    val roots = paths.map(qualified(spark, _))
+    val recorded = Option(artifactUpstreams.get(spark)).fold(Map.empty[String, Seq[String]])(_.toMap)
+    def widened(roots: Set[String]): Set[String] = {
+      val more = recorded.collect { case (r, ups) if ups.exists(u => roots.exists(under(u, _))) => r }
+      if (more.forall(roots)) roots else widened(roots ++ more)
+    }
+    val roots = widened(paths.map(qualified(spark, _)).toSet)
     val stale = (src: String) => roots.exists(under(src, _))
     frames.removeDerived(spark, stale)
     scalars.removeDerived(spark, stale)
   }
 
-  /** Artifact root -> its gate's upstream paths, all qualified, as
-    * last recorded by [[Artifacts]]: a frame reading an artifact also
-    * depends on what the artifact was built from.
-    */
-  private val artifactUpstreams =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[String]]
+  /** Per session, artifact root -> its gate's upstream paths (qualified), as last recorded. */
+  private val artifactUpstreams = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TrieMap[String, Seq[String]]]())
 
   private[sources] def recordArtifact(spark: SparkSession, root: String,
       upstreams: Seq[String]): Unit =
-    artifactUpstreams.put(qualified(spark, root), upstreams.map(qualified(spark, _)))
+    artifactUpstreams.computeIfAbsent(spark, _ => TrieMap.empty)
+      .put(qualified(spark, root), upstreams.map(qualified(spark, _)))
 
   /** The sources read by a lineage cut ([[cut]]), keyed by the RDD its
     * plan scans from then on; weak, so a dropped cut frees its entry.
@@ -215,25 +220,18 @@ object DfCache {
 
   /** The durable sources `df` reads: the root paths of every file
     * relation in its analyzed plan (subqueries included) and the
-    * recorded sources of every cut it scans, closed over the artifact
-    * roots they lie under — each adds that artifact's gate upstreams,
-    * recursively.
+    * recorded sources of every cut it scans. A path under an artifact
+    * root stands for what that artifact was built from too; the link is
+    * followed when invalidating ([[invalidateDerived]]), not here.
     */
-  private def sourcesOf(df: DataFrame): Set[String] = {
-    val direct = df.queryExecution.analyzed.collectWithSubqueries {
+  private def sourcesOf(df: DataFrame): Set[String] =
+    df.queryExecution.analyzed.collectWithSubqueries {
       case l: LogicalRelation => l.relation match {
         case h: HadoopFsRelation => h.location.rootPaths.map(_.toString).toSet
         case _ => Set.empty[String]
       }
       case r: LogicalRDD => Option(cutSources.get(r.rdd)).getOrElse(Set.empty[String])
     }.flatten.toSet
-    def closed(todo: Set[String], seen: Set[String]): Set[String] =
-      if (todo.isEmpty) seen
-      else closed(todo.flatMap(p => artifactUpstreams.collect {
-        case (root, ups) if under(p, root) => ups
-      }.flatten) -- seen -- todo, seen ++ todo)
-    closed(direct, Set.empty)
-  }
 
   private def qualified(spark: SparkSession, path: String): String = {
     val p = new Path(path)

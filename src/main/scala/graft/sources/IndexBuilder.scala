@@ -285,8 +285,9 @@ object IndexBuilder {
     * pruned batches for the search family's per-query shuffle.
     */
   def cached(spark: SparkSession, dir: String): DataFrame =
-    // the derived sources reach the corpus tables through the snapshot
-    // gate's record, so a corpus rewritten in-session drops this entry
+    // its source is the snapshot version; the snapshot gate's record
+    // links it to the corpus tables, so a corpus rewritten in-session
+    // drops this entry
     DfCache.getOrPersist(spark, s"index:$dir")(
       loadOrSnapshot(spark, dir)
         .repartition(col("table_id"), col("row_id")))
@@ -348,8 +349,9 @@ object IndexBuilder {
     * the partition-pruned search family would otherwise re-pay the
     * versioned gate's freshness probe (a recursive listing of the
     * snapshot) on every query, for metadata-sized artifacts. Each
-    * entry's derived sources reach the snapshot and the corpus through
-    * the gates' records, so an in-session rebuild still drops it.
+    * entry's source is its companion's version dir, which the gates'
+    * records link to the snapshot and the corpus, so an in-session
+    * rebuild still drops it.
     */
   def cachedKeyStats(spark: SparkSession, dir: String): DataFrame =
     DfCache.getOrPersist(spark, s"keystats-artifact:$dir")(loadOrBuildKeyStats(spark, dir))

@@ -205,6 +205,35 @@ class ArtifactStalenessSpec extends SparkTestBase {
     }
   }
 
+  test("companion entries cached before the session runs the snapshot gate drop on a corpus rewrite") {
+    import org.apache.spark.sql.functions.{col, concat, count, lit, when}
+    val dir = isolatedCorpus()
+    // the companions are fresh on disk before the session below first
+    // touches them, so its first gate runs are the companions' own:
+    // the snapshot gate has recorded nothing in it yet.
+    IndexBuilder.loadOrBuildKeyStats(spark, dir).count()
+    IndexBuilder.loadOrBuildTableSketch(spark, dir).count()
+    val s = spark.newSession()
+    val stats0 = IndexBuilder.cachedKeyStats(s, dir).collect().toSet
+    IndexBuilder.cachedTableSketch(s, dir).count()
+    // rewrite: every odd customer gets a name none of the old rows had.
+    val src = s"$dir/customer.parquet"
+    s.read.parquet(src)
+      .withColumn("c_name",
+        when(col("c_custkey") % 2 === 1, concat(lit("renamed-"), col("c_name")))
+          .otherwise(col("c_name")))
+      .localCheckpoint(true)
+      .write.mode("overwrite").parquet(src)
+    val rebuilt = IndexBuilder.loadOrSnapshot(s, dir)
+    val stats = rebuilt.groupBy("key").agg(count(lit(1)).as("kdf")).collect().toSet
+    assert(stats != stats0, "the rewrite did not move the key stats")
+    assert(IndexBuilder.cachedKeyStats(s, dir).collect().toSet == stats,
+      "the session served key stats of the superseded snapshot")
+    assert(IndexBuilder.cachedTableSketch(s, dir).collect().toSet ==
+      JoinSearch.tableKeySketch(rebuilt).collect().toSet,
+      "the session served a sketch of the superseded snapshot")
+  }
+
   test("a warm session cache cannot poison a rebuilt documents artifact") {
     import graft.operators.Dedup
     import org.apache.spark.sql.functions.col
