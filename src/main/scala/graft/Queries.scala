@@ -404,33 +404,33 @@ SELECT key, count(*) AS kdf FROM live GROUP BY key ORDER BY key"""))),
       Some(SearchOracle.stage(customerSpec,
         "SELECT key, map_key FROM maps ORDER BY key, map_key"))),
     Q("w1_cooccurrence_reduce",
-      (s, dir) => JoinSearch.reduceShared(JoinSearch.probe(index(s, dir), maps(s, dir)), 2)
+      (s, dir) => JoinSearch.reduce(JoinSearch.probe(index(s, dir), maps(s, dir)), 2)
         .orderBy("table_id", "row_id", "key"),
       Some(SearchOracle.stage(customerSpec,
         "SELECT key, table_id, column_id, row_id FROM kept ORDER BY table_id, row_id, key"))),
     Q("j1_mapkey_join",
       (s, dir) => JoinSearch.joinMapped(
-        JoinSearch.reduceShared(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir))
+        JoinSearch.reduce(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir))
         .orderBy("table_id", "row_id", "key", "map_key"),
       Some(SearchOracle.stage(customerSpec,
         "SELECT key, table_id, column_id, row_id, map_key FROM mapped ORDER BY table_id, row_id, key, map_key"))),
     Q("w2_multiattr_matches",
       (s, dir) => JoinSearch.matches(JoinSearch.joinMapped(
-        JoinSearch.reduceShared(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir)), 2)
+        JoinSearch.reduce(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir)), 2)
         .orderBy("table_id", "row_id", "key", "map_key"),
       Some(SearchOracle.stage(customerSpec,
         "SELECT key, table_id, column_id, row_id, map_key FROM matches ORDER BY table_id, row_id, key, map_key"))),
     Q("a1_column_scores",
       (s, dir) => JoinSearch.columnScores(
         JoinSearch.matches(JoinSearch.joinMapped(
-          JoinSearch.reduceShared(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir)), 2))
+          JoinSearch.reduce(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir)), 2))
         .orderBy("table_id", "column_id"),
       Some(SearchOracle.stage(customerSpec,
         "SELECT table_id, column_id, join_score FROM col_scores ORDER BY table_id, column_id"))),
     Q("w3_top_columns",
       (s, dir) => JoinSearch.topColumns(JoinSearch.columnScores(
         JoinSearch.matches(JoinSearch.joinMapped(
-          JoinSearch.reduceShared(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir)), 2)), 2)
+          JoinSearch.reduce(JoinSearch.probe(index(s, dir), maps(s, dir)), 2), maps(s, dir)), 2)), 2)
         .orderBy("table_id", "column_id"),
       Some(SearchOracle.stage(customerSpec,
         "SELECT table_id, column_id, join_score FROM top_cols ORDER BY table_id, column_id"))))

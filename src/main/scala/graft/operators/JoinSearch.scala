@@ -37,6 +37,11 @@ import graft.functions.Tokenize
   * members' [[searchTables]] answers, so a batch member reads and
   * fills its single search's entry. The other `searchTables*` forms
   * are the cross-check strategies the property spec compares against.
+  * Every path derives its matches from one unpersisted definition:
+  * the per-row key sets ([[rowKeysOf]]), floored and exploded by
+  * [[reduce]] for the staged forms and anchor-verified by
+  * [[conjunctionAnchored]] for the `colscores:` fill; only
+  * `colscores:` and the query-side `qmaps:` persist.
   *
   * Scale posture: the query table is tiny next to the index, so
   * mappings are broadcast (J1 never shuffles the postings side twice);
@@ -125,9 +130,8 @@ object JoinSearch {
     * stats semi-join), each of which re-executed the query-side scan
     * + clean + distinct lineage — and the registered queries re-derive
     * the SAME few query tables across ~30 search invocations per
-    * session. In the anchored strategies those branches now sit
-    * inside cached fills ([[searchTables]]' `colscores:`, the
-    * `rowkeys:` and `anchors:` frames of [[conjunctionAnchored]]), so a warm
+    * session. In [[searchTables]] those branches sit inside its cached
+    * `colscores:` fill, so a warm
     * [[searchTables]] reads the maps frame only for its semantic
     * hash, half of the `colscores:` key; a `colscores:` miss reads
     * its key list once per maps hash ([[queryKeys]]). The frame is
@@ -249,23 +253,25 @@ object JoinSearch {
     index.join(broadcast(allowed), Seq("key"), "left_semi")
   }
 
-  /** P6+W1: one posting per (table,row,key), then keep only corpus
-    * rows hit by >= colCount distinct query keys
-    * (`Par_Search.py:244-250`).
+  /** The conjunction's corpus-side aggregation, the one definition of
+    * the per-(table,row) matched-key set: each probed row's postings
+    * collected in ONE (t,r)-keyed aggregation — one exchange, where a
+    * (t,r,key) min before a (t,r) collect would shuffle the probe
+    * output twice — and deduped row-locally to one (key, min
+    * column_id) entry per key, `kcs`. `sort_array` orders by (key
+    * asc, column_id asc), so the first entry of each key run carries
+    * that key's min column, and the index-guarded filter keeps exactly
+    * those. Groups are bounded by the corpus table's column count (x
+    * duplicate-id multiplicity), so the collected list is never larger
+    * than the row's own postings. `kmap` (key -> min column) is built
+    * once per corpus row, not per anchor candidate: a hot-anchor query
+    * fans each row out to many map_keys. [[reduce]] does not read it
+    * and the optimizer prunes it there. Unpersisted: every
+    * reader ([[searchTables]]' `colscores:` fill, the cross-check
+    * strategies, the stage queries) aggregates the key sets inside its
+    * own plan.
     */
-  def reduce(postings: DataFrame, colCount: Int): DataFrame = {
-    // ONE exchange (round-17 optimization): the original
-    // groupBy(t,r,key).min + whole-partition window pair shuffled the
-    // probed postings twice (and the window added a sort). Collecting
-    // each row's postings in one (t,r)-keyed aggregation, deduping
-    // (key, min column) row-locally (sort_array orders by key then
-    // column_id, so the first entry of each key run is that key's min
-    // column), filtering on the distinct-key count, and exploding
-    // back produces the identical row set — groups are bounded by the
-    // corpus table's column count, so the collected list is never
-    // larger than the row's own postings. The whole-partition-count
-    // window cross-check of W1 survives in [[searchTablesRowWise]]'s
-    // post-join floor and [[matches]]' W2 window.
+  private[graft] def rowKeysOf(postings: DataFrame): DataFrame =
     postings
       .groupBy("table_id", "row_id")
       .agg(sort_array(collect_list(struct(col("key"), col("column_id"))))
@@ -273,11 +279,23 @@ object JoinSearch {
       .select(col("table_id"), col("row_id"),
         expr("filter(kraw, (x, i) -> i = 0 OR kraw[i-1].key != x.key)")
           .as("kcs"))
+      .withColumn("kmap", map_from_entries(col("kcs")))
+
+  /** P6+W1: one posting per (table,row,key), then keep only corpus
+    * rows hit by >= colCount distinct query keys
+    * (`Par_Search.py:244-250`): the [[rowKeysOf]] key sets, floored on
+    * their size and exploded back to postings — one exchange, the
+    * identical row set to the reference's dedup + whole-partition
+    * count window. That window's cross-check survives in
+    * [[searchTablesRowWise]]'s post-join floor and [[matches]]' W2
+    * window.
+    */
+  def reduce(postings: DataFrame, colCount: Int): DataFrame =
+    rowKeysOf(postings)
       .where(size(col("kcs")) >= colCount)
       .select(col("table_id"), col("row_id"), explode(col("kcs")).as("kc"))
       .select(col("kc.key").as("key"), col("table_id"),
         col("kc.column_id").as("column_id"), col("row_id"))
-  }
 
   /** J1: attach each surviving posting to every query row (map_key)
     * containing its key (`Par_Search.py:265`). Mappings derive from
@@ -298,8 +316,65 @@ object JoinSearch {
       .drop("cnt")
   }
 
+  /** Per-key posting counts over an index, session-cached
+    * (`idxstats:`): the hot-key guard's statistic ([[Narrow.DfCap]],
+    * [[Narrow.DfCapFraction]]), which needs every key's df, not only
+    * the probed ones. Session-cached rather than a per-query pass, so
+    * the stats scan amortizes over every query in the session; on a
+    * cluster this table is written beside
+    * the snapshot (vocabulary-sized, thin) exactly like an ANALYZE
+    * artifact ([[graft.sources.IndexBuilder.loadOrBuildKeyStats]]).
+    * [[conjunctionAnchored]] accepts it as its anchor statistic;
+    * [[searchTables]]' fill does not read it: it counts its probe
+    * output instead ([[probeKeyStats]]), which for every query key is
+    * the same number and, over a live index that changes identity per
+    * landed batch, avoids a whole-index aggregation and an
+    * `idxstats:` entry per batch.
+    */
+  def indexKeyStats(index: DataFrame): DataFrame = {
+    import graft.sources.DfCache
+    DfCache.getOrPersist(index.sparkSession, s"idxstats:${index.semanticHash()}")(
+      index.groupBy("key").agg(count(lit(1)).as("kdf")))
+  }
+
+  /** Per-key posting counts over a probe output: for every probed key
+    * its corpus df, since the probe keeps all of a key's postings.
+    */
+  private def probeKeyStats(postings: DataFrame): DataFrame =
+    postings.groupBy("key").agg(count(lit(1)).as("kdf"))
+
+  /** The query-side anchor/req derivation of the anchored conjunction:
+    * per query row, in ONE aggregation (round-17 —
+    * previously a distinct + per-map_key window + separate req
+    * groupBy + join, three query-side exchanges and five stages for
+    * the same tiny frame), its full entry list (multiplicity kept)
+    * and the rarest postings-bearing key as the join anchor. The
+    * struct min over (kdf, key) IS the old window's
+    * orderBy(kdf asc, key asc) rn=1 — struct ordering is
+    * field-lexicographic — and `min` skips the null kdf of keys
+    * without postings (the left join keeps them so `req` stays
+    * complete; a map_key with NO postings-bearing key gets a null
+    * anchor and drops, exactly the old inner join's behavior).
+    * Query-side: tiny, broadcast by every consumer. Unpersisted, over
+    * a statistic covering at most the query's keys (`queryKeyDf`,
+    * broadcast here), built inside whatever plan
+    * [[conjunctionAnchored]] is part of.
+    */
+  private def anchorsPlan(maps: DataFrame, queryKeyDf: DataFrame): DataFrame =
+    maps
+      .join(broadcast(queryKeyDf), Seq("key"), "left_outer")
+      .groupBy("map_key")
+      .agg(collect_list(col("key")).as("req"),
+        min(when(col("kdf").isNotNull,
+          struct(col("kdf"), col("key")))).as("a"))
+      .where(col("a").isNotNull)
+      .select(col("map_key"), col("a.key").as("anchor_key"), col("req"))
+
   /** Anchored conjunction — the multi-attribute match (W1+J1+W2) as a
-    * prefix-filtered set-containment join, the 100 TB physical shape.
+    * prefix-filtered set-containment join, the 100 TB physical shape,
+    * and the one conjunction every anchored path builds
+    * ([[searchTables]]' `colscores:` fill included). Unpersisted: it
+    * is [[rowKeysOf]] + [[anchorsPlan]], planned into its caller.
     *
     * The windowed form joins EVERY surviving posting to EVERY query
     * row containing its key and then counts per (row, map_key) group:
@@ -315,11 +390,19 @@ object JoinSearch {
     * matched-key set. The blowup term becomes Σ_mapkey df(anchor) —
     * proportional to the most selective attribute, not the least.
     *
+    * The anchor statistic is the per-key posting count of `postings`
+    * ([[probeKeyStats]]: the probe keeps every posting of a matching
+    * key, so it IS the corpus df and needs no second index pass), or,
+    * when `stats` is supplied (normally [[indexKeyStats]] or the
+    * durable [[graft.sources.IndexBuilder.loadOrBuildKeyStats]]),
+    * those stats narrowed to the query's keys FIRST by a broadcast
+    * semi-join — the stats table is vocabulary-sized at scale and must
+    * never itself be the broadcast side. Anchor choice cannot change
+    * results — a conjunction row contains EVERY key of its map_key,
+    * any anchor included — so any posting-count statistic is correct.
+    *
     * Output is row-identical (multiset) to
     * `matches(joinMapped(reduce(postings, n), maps), n)`:
-    *  - per-key df over the probe output IS the corpus df (the probe
-    *    keeps every posting of a matching key), so anchor choice
-    *    needs no second index pass;
     *  - a (row, map_key) group survives the windowed count iff every
     *    maps entry of map_key (WITH multiplicity — duplicate cleaned
     *    values in one query row count twice) finds its key among the
@@ -328,183 +411,21 @@ object JoinSearch {
     *  - the recover step explodes the verified map_key's entry list,
     *    restoring per-entry multiplicity and min-column attribution.
     *
-    * Shuffle audit: ONE corpus lineage — the (table,row,key) posting
-    * dedup, re-clustered once to the per-row key set — and broadcasts
-    * everywhere else. Candidates derive from the per-row key set
+    * Shuffle audit: ONE corpus lineage — the per-row key set — and
+    * broadcasts everywhere else. Candidates derive from the key set
     * itself (explode + broadcast anchor join), so anchoring adds no
     * second pass over the postings and no row-side verify join at
     * all. The windowed form's two full-width window exchanges over
     * the joined blowup are gone.
     */
-  /** Per-key posting counts over an index, session-cached: the
-    * anchor-selection statistic as a BUILD-TIME artifact rather than
-    * a per-query pass, for the hot-key guard ([[Narrow.DfCap]], which
-    * needs every key's df, not only the probed ones) and
-    * [[conjunctionAnchored]]. Without it those scan the index twice
-    * (once under the anchor-statistic lineage, once under the row key
-    * sets); with it, once — the stats scan amortizes over every query
-    * in the session. [[searchTables]] does not read it: it counts its
-    * probe output instead, which for every query key is the same
-    * number and, over a live index that changes identity per landed
-    * batch, avoids a whole-index aggregation and an `idxstats:` entry
-    * per batch. On a cluster this table is written beside the
-    * snapshot (vocabulary-sized, thin) exactly like an ANALYZE
-    * artifact.
-    */
-  def indexKeyStats(index: DataFrame): DataFrame = {
-    import graft.sources.DfCache
-    DfCache.getOrPersist(index.sparkSession, s"idxstats:${index.semanticHash()}")(
-      index.groupBy("key").agg(count(lit(1)).as("kdf")))
-  }
-
-  /** As [[conjunctionAnchored]] with the anchor statistic supplied
-    * (normally [[indexKeyStats]]) instead of recomputed from the
-    * probe output. Anchor choice cannot change results — a
-    * conjunction row contains EVERY key of its map_key, any anchor
-    * included — so any posting-count statistic is correct; supplying
-    * the session-cached one removes the second index scan.
-    */
-  def conjunctionAnchored(postings: DataFrame, maps: DataFrame,
-      colCount: Int, stats: Option[DataFrame]): DataFrame =
-    // corpus df per matched key: the supplied build-time statistic,
-    // or (self-contained fallback) one pass over the probe output.
-    // The row key sets come from the shared session persist
-    // ([[rowKeysShared]], round-18 second pass), the one
-    // materialization the stage queries share ([[searchTables]]
-    // persists its column scores instead).
-    conjunctionFromRowKeys(rowKeysShared(postings),
-      anchorsOf(maps, stats.getOrElse(probeKeyStats(postings))), colCount)
-
-  /** Per-key posting counts over a probe output: for every probed key
-    * its corpus df, since the probe keeps all of a key's postings.
-    */
-  private def probeKeyStats(postings: DataFrame): DataFrame =
-    postings.groupBy("key").agg(count(lit(1)).as("kdf"))
-
-  /** The conjunction's corpus-side aggregation: the per-(table,row)
-    * key sets, which [[rowKeysShared]] persists for the stage queries
-    * and cross-check strategies and [[searchTables]]' fill reads
-    * unpersisted. `kmap` is built HERE, once per corpus
-    * row, not per anchor candidate — a hot-anchor query (every key
-    * of a categorical wide row) fans each row out to many map_keys,
-    * and the old post-join placement rebuilt the map per fanned row.
-    */
-  private[graft] def rowKeysOf(postings: DataFrame): DataFrame =
-    postings
-      .groupBy("table_id", "row_id")
-      .agg(sort_array(collect_list(struct(col("key"), col("column_id"))))
-        .as("kraw"))
-      .select(col("table_id"), col("row_id"),
-        expr("filter(kraw, (x, i) -> i = 0 OR kraw[i-1].key != x.key)")
-          .as("kcs"))
-      .withColumn("kmap", map_from_entries(col("kcs")))
-
-  /** [[rowKeysOf]] as a session persist, semantically keyed on the
-    * probed lineage (round-18, second pass): the per-(table,row) key
-    * set is the one corpus-side materialization that
-    * [[conjunctionAnchored]], the windowed/row-wise/cell-wise
-    * cross-check strategies and the five registered stage queries
-    * (W1/J1/W2/A1/W3) derive from the same probe — each re-ran the
-    * probe semi-join + the aggregation per invocation, a dozen
-    * re-derivations of the same frame per session on the flagship
-    * query tables. One fill serves them all, a single `rowkeys:`
-    * family (same LRU bound,
-    * [[graft.sources.DfCache.familyCap]]). Two routes deliberately
-    * stay off it: [[searchTables]] (every narrowing) reads the key
-    * sets once per `colscores:` fill, so it aggregates them
-    * unpersisted and persists the far narrower column scores instead;
-    * and the huge-query degradation route ([[searchTablesShuffled]])
-    * keeps its unpersisted [[reduce]]: a one-shot giant probe should
-    * not be materialized to executor storage.
-    */
-  private[graft] def rowKeysShared(postings: DataFrame): DataFrame =
-    graft.sources.DfCache.getOrPersist(postings.sparkSession,
-      s"rowkeys:${postings.semanticHash()}")(rowKeysOf(postings))
-
-  /** [[reduce]] served from the shared per-(table,row) key-set persist
-    * — row-identical to `reduce(postings, colCount)` by construction
-    * ([[reduce]] IS [[rowKeysOf]] + the >= colCount filter + the
-    * explode; the unread `kmap` column is dropped by the projection):
-    * the staged queries and the windowed/row-wise/cell-wise strategies
-    * share the anchored default's one materialization instead of
-    * re-aggregating the probe output per invocation.
-    */
-  private[graft] def reduceShared(postings: DataFrame, colCount: Int): DataFrame =
-    rowKeysShared(postings)
-      .where(size(col("kcs")) >= colCount)
-      .select(col("table_id"), col("row_id"), explode(col("kcs")).as("kc"))
-      .select(col("kc.key").as("key"), col("table_id"),
-        col("kc.column_id").as("column_id"), col("row_id"))
-
-  /** The query-side anchor/req derivation of the anchored conjunction:
-    * per query row, in ONE aggregation (round-17 —
-    * previously a distinct + per-map_key window + separate req
-    * groupBy + join, three query-side exchanges and five stages for
-    * the same tiny frame), its full entry list (multiplicity kept)
-    * and the rarest postings-bearing key as the join anchor. The
-    * struct min over (kdf, key) IS the old window's
-    * orderBy(kdf asc, key asc) rn=1 — struct ordering is
-    * field-lexicographic — and `min` skips the null kdf of keys
-    * without postings (the left join keeps them so `req` stays
-    * complete; a map_key with NO postings-bearing key gets a null
-    * anchor and drops, exactly the old inner join's behavior).
-    * Query-side: tiny, broadcast by every consumer.
-    *
-    * This is the plan alone, over a statistic already narrowed to the
-    * query's keys (`queryKeyDf`, broadcast here): [[searchTables]]
-    * builds it inside its `colscores:` fill from its probe output's
-    * key counts; [[anchorsOf]] is the persisted form
-    * [[conjunctionAnchored]] reads.
-    */
-  private def anchorsPlan(maps: DataFrame, queryKeyDf: DataFrame): DataFrame =
-    maps
-      .join(broadcast(queryKeyDf), Seq("key"), "left_outer")
-      .groupBy("map_key")
-      .agg(collect_list(col("key")).as("req"),
-        min(when(col("kdf").isNotNull,
-          struct(col("kdf"), col("key")))).as("a"))
-      .where(col("a").isNotNull)
-      .select(col("map_key"), col("a.key").as("anchor_key"), col("req"))
-
-  /** [[anchorsPlan]] over any posting-count statistic, session-
-    * persisted (`anchors:`) for [[conjunctionAnchored]].
-    */
-  private def anchorsOf(maps: DataFrame, keyDf: DataFrame): DataFrame = {
-    // narrow the statistic to the query's keys FIRST (broadcast
-    // semi-join: the stats table is vocabulary-sized at scale and
-    // must never itself be the broadcast side).
-    val queryKeyDf = keyDf.join(
-      broadcast(maps.select("key").distinct()), Seq("key"), "left_semi")
-    val a = anchorsPlan(maps, queryKeyDf)
-    // session persist (round-18 second pass): the frame is query-
-    // table-sized, but its DERIVATION is stage-heavy — the maps
-    // distinct, the stats semi-join, the left-outer join and the
-    // aggregation are four sequential broadcast/shuffle rounds of
-    // tiny data, re-run per invocation by every hinted search. After
-    // the rowkeys persist moved the corpus side out of the warm path,
-    // this chain WAS the warm path: the measured per-invocation cost
-    // is stage-launch latency, not data. Same small-query contract as
-    // the qmaps persist it derives from.
-    graft.sources.DfCache.getOrPersist(maps.sparkSession, s"anchors:${a.semanticHash()}")(a)
-  }
-
-  private def conjunctionFromRowKeys(rowKeys: DataFrame, anchors: DataFrame,
-      colCount: Int): DataFrame = {
-    // per corpus row: matched keys with min-column attribution
-    // ([[rowKeysOf]] — the single materialization of the posting
-    // lineage, in ONE exchange; round-17 optimization: the old
-    // groupBy(t,r,key).min + groupBy(t,r).collect_list pair shuffled
-    // the probe output twice; the (key, min column) dedup is
-    // row-local over the collected group — sort_array orders by
-    // (key asc, column_id asc), so the first entry of each key run
-    // carries that key's min column_id, and the indexed filter keeps
-    // exactly those. Groups are bounded by the corpus table's column
-    // count (x duplicate-id multiplicity), so the pre-dedup list is
-    // never larger than the row's postings).
-    rowKeys
+  def conjunctionAnchored(postings: DataFrame, maps: DataFrame, colCount: Int,
+      stats: Option[DataFrame] = None): DataFrame = {
+    val queryKeyDf = stats.fold(probeKeyStats(postings))(
+      _.join(broadcast(maps.select("key").distinct()), Seq("key"), "left_semi"))
+    rowKeysOf(postings)
       .select(col("table_id"), col("row_id"), col("kcs"), col("kmap"),
         explode(col("kcs")).as("kc"))
-      .join(broadcast(anchors), col("kc.key") === col("anchor_key"))
+      .join(broadcast(anchorsPlan(maps, queryKeyDf)), col("kc.key") === col("anchor_key"))
       .where(size(col("kcs")) >= colCount &&
         expr("forall(req, k -> map_contains_key(kmap, k))"))
       .select(col("table_id"), col("row_id"), col("map_key"), col("kmap"),
@@ -513,11 +434,6 @@ object JoinSearch {
         expr("try_element_at(kmap, key)").cast("int").as("column_id"),
         col("row_id"), col("map_key"))
   }
-
-  /** Self-contained form: anchor statistic from the probe output. */
-  def conjunctionAnchored(postings: DataFrame, maps: DataFrame,
-      colCount: Int): DataFrame =
-    conjunctionAnchored(postings, maps, colCount, None)
 
   /** A1: per-column join score (`Par_Search.py:312-316`). */
   def columnScores(m: DataFrame): DataFrame =
@@ -616,16 +532,14 @@ object JoinSearch {
     *
     * The fill, on a miss: the probe is one filter on the query's
     * distinct key list (see [[probe]]), collected once per maps hash
-    * and memoized ([[queryKeys]]); the anchor statistic is the
-    * per-key posting count of that probe output, equal to
-    * [[indexKeyStats]] for every query key, and the anchors are built
-    * in the fill plan ([[anchorsPlan]]), not persisted. Over a
+    * and memoized ([[queryKeys]]), and the column scores of its
+    * [[conjunctionAnchored]] — self-contained, so the anchor statistic
+    * is the per-key posting count of that probe output, equal to
+    * [[indexKeyStats]] for every query key. Over a
     * narrowed index the counts are the narrowed ones; that only moves
     * which key joins first, since every conjunction row contains every
-    * key of its query row. It reads the
-    * probed key sets once, so it uses the unpersisted [[rowKeysOf]]
-    * rather than the wide `rowkeys:` frame; its map-side partial
-    * aggregation stays parallel and only the merge of the
+    * key of its query row. The column-score aggregation's map-side
+    * partial aggregation stays parallel and only the merge of the
     * per-(table, column) counts, bounded by the number of matched
     * columns, runs in one task. The
     * detach runs the fill's shuffle stages inside this call; the
@@ -636,7 +550,15 @@ object JoinSearch {
     */
   def searchTables(index: DataFrame, query: DataFrame, cols: Seq[String],
       maxTables: Int = 20, narrow: Narrow = Narrow.All): DataFrame =
-    tableScores(topColumns(columnScoresCached(index, query, cols, narrow), cols.size))
+    ranked(columnScoresCached(index, query, cols, narrow), cols.size, maxTables)
+
+  /** The ranking tail every table search ends in: each table's top
+    * `topN` column scores summed (W3+A2), ranked by score with the
+    * table id as the total-order tie-breaker, first `maxTables` kept
+    * (O2/O3).
+    */
+  private def ranked(colScores: DataFrame, topN: Int, maxTables: Int): DataFrame =
+    tableScores(topColumns(colScores, topN))
       .orderBy(col("join_score").desc, col("table_id").asc)
       .limit(maxTables)
 
@@ -677,8 +599,7 @@ object JoinSearch {
   private def columnScoresFill(index: DataFrame, maps: DataFrame,
       mapsHash: Int, colCount: Int): DataFrame = {
     val probed = index.where(col("key").isin(queryKeys(maps, mapsHash): _*))
-    columnScores(conjunctionFromRowKeys(rowKeysOf(probed),
-      anchorsPlan(maps, probeKeyStats(probed)), colCount))
+    columnScores(conjunctionAnchored(probed, maps, colCount))
   }
 
   /** Batched multi-query search: N query tables, each answered by
@@ -725,9 +646,7 @@ object JoinSearch {
     */
   def searchTablesSeqParity(index: DataFrame, query: DataFrame,
       cols: Seq[String], maxTables: Int = 30): DataFrame =
-    tableScores(topColumns(columnScoresCached(index, query, cols, Narrow.All), 2))
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
+    ranked(columnScoresCached(index, query, cols, Narrow.All), 2, maxTables)
 
   /** The original staged windowed pipeline end-to-end (W1 window ->
     * broadcast J1 -> W2 window) — result-identical to [[searchTables]],
@@ -737,12 +656,8 @@ object JoinSearch {
   def searchTablesWindowed(index: DataFrame, query: DataFrame, cols: Seq[String],
       maxTables: Int = 20): DataFrame = {
     val m = preparedMappings(query, cols)
-    val top = topColumns(
-      columnScores(matches(joinMapped(reduceShared(probe(index, m), cols.size), m), cols.size)),
-      cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
+    ranked(columnScores(matches(joinMapped(reduce(probe(index, m), cols.size), m), cols.size)),
+      cols.size, maxTables)
   }
 
   /** Size-gated dispatch between the hinted default and the
@@ -797,10 +712,7 @@ object JoinSearch {
     val m = mappings(prepareInput(query, cols), cols)
     val probed = index.join(m.select("key").distinct(), Seq("key"), "left_semi")
     val mapped = reduce(probed, cols.size).join(m, Seq("key"))
-    val top = topColumns(columnScores(matches(mapped, cols.size)), cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
+    ranked(columnScores(matches(mapped, cols.size)), cols.size, maxTables)
   }
 
   /** End-to-end: ranked column scores (`Par_Search.py:329`), from
@@ -830,19 +742,18 @@ object JoinSearch {
   def searchTablesRowWise(index: DataFrame, query: DataFrame,
       cols: Seq[String], maxTables: Int = 20): DataFrame = {
     val m = preparedMappings(query, cols)
-    // per-(table,row,key) min-column dedup == the shared key-set
-    // persist exploded with no count floor (colCount = 1): row-wise
-    // rides the same materialization as every other hinted strategy.
+    // per-(table,row,key) min-column dedup == the key sets exploded
+    // with no count floor (colCount = 1).
     // The W1 floor (>= N DISTINCT matched keys per row, counted over
     // ALL the row's postings including ones whose own map_key group
-    // fails the conjunction) is `size(kcs)` — the cached frame
+    // fails the conjunction) is `size(kcs)` — the key-set frame
     // already holds each row's deduped key set, so carrying it
     // through the explode replaces the post-join collect_set window
     // (a corpus-side exchange + sort over the mapped fan-out) with a
     // row-local projection. Same value per (table, row) by
     // construction: the mapped postings' distinct keys ARE the kcs
     // entries (every probed key is a maps key).
-    val dedup = rowKeysShared(probe(index, m))
+    val dedup = rowKeysOf(probe(index, m))
       .select(col("table_id"), col("row_id"),
         size(col("kcs")).as("dk"), explode(col("kcs")).as("kc"))
       .select(col("kc.key").as("key"), col("table_id"),
@@ -851,10 +762,7 @@ object JoinSearch {
     val conj = matches(mapped, cols.size)
       .where(col("dk") >= cols.size)
       .drop("dk")
-    val top = topColumns(columnScores(conj), cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
+    ranked(columnScores(conj), cols.size, maxTables)
   }
 
   /** Cell-wise strategy (the reference's per-cell probes,
@@ -877,12 +785,8 @@ object JoinSearch {
           Seq("key"), "left_semi"))
       .reduce(_ unionByName _)
       .distinct()
-    val top = topColumns(
-      columnScores(matches(joinMapped(reduceShared(probed, cols.size), m), cols.size)),
-      cols.size)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
+    ranked(columnScores(matches(joinMapped(reduce(probed, cols.size), m), cols.size)),
+      cols.size, maxTables)
   }
 
   /** Alternate physical strategy: the W1/W2 whole-partition window
@@ -894,25 +798,24 @@ object JoinSearch {
     * The count-filter + join shape consumes each subtree twice (the
     * dedup feeds both the row counts and the kept join; ditto mapped)
     * — without a persist the probe chain executed up to 4x and this
-    * query regressed to the #4 bench line in round 2. Both reused
-    * subtrees persist MEMORY_AND_DISK, registered in [[DfCache]]
-    * under the plan's semanticHash: a bare per-call `.persist()`
-    * pins blocks in the SQL CacheManager forever (it holds a strong
-    * reference — the ContextCleaner never reaps them), so every
-    * invocation leaked two cached plans for the life of the session.
-    * Semantic keying dedups repeat invocations to one cached copy.
+    * query regressed to the #4 bench line in round 2. The mapped
+    * subtree persists MEMORY_AND_DISK (`gbv-mapped:`), so the dedup's
+    * two reads both happen inside its one fill. It is registered in
+    * [[graft.sources.DfCache]] under the plan's semanticHash: a bare
+    * per-call `.persist()` pins blocks in the SQL CacheManager forever
+    * (it holds a strong reference — the ContextCleaner never reaps
+    * them), so every invocation leaked a cached plan for the life of
+    * the session. Semantic keying dedups repeat invocations to one
+    * cached copy.
     */
   def searchTablesViaGroupBy(index: DataFrame, query: DataFrame,
       cols: Seq[String], maxTables: Int = 20): DataFrame = {
     import graft.sources.DfCache
     val colCount = cols.size
     val m = preparedMappings(query, cols)
-    // the (t,r,key) min-column dedup rides the SHARED key-set persist
-    // (round-18 second pass — the private gbv-dedup persist held a
-    // second cached copy of a frame [[reduceShared]] now serves to
-    // every hinted strategy); both consumers below re-derive the
-    // cheap explode from the cached key sets.
-    val dedup = reduceShared(probe(index, m), 1)
+    // the (t,r,key) min-column dedup, unpersisted: both consumers
+    // below read it inside the one `gbv-mapped:` fill.
+    val dedup = reduce(probe(index, m), 1)
     val rowCounts = dedup.groupBy("table_id", "row_id")
       .agg(count(lit(1)).as("cnt")).where(col("cnt") >= colCount)
     val kept = dedup.join(rowCounts.select("table_id", "row_id"),
@@ -925,10 +828,7 @@ object JoinSearch {
     val matched = mapped.join(
       grpCounts.select("table_id", "row_id", "map_key"),
       Seq("table_id", "row_id", "map_key"))
-    val top = topColumns(columnScores(matched), colCount)
-    tableScores(top)
-      .orderBy(col("join_score").desc, col("table_id").asc)
-      .limit(maxTables)
+    ranked(columnScores(matched), colCount, maxTables)
   }
 
   // ---- table-pruning pre-filter (the 100 TB search accelerator) ----

@@ -18,11 +18,14 @@ import scala.collection.concurrent.TrieMap
   * Growth is BOUNDED per key family: keys follow the
   * `family:qualifier` convention, and each family keeps at most
   * [[familyCap]] live entries per session, least-recently-touched
-  * evicted (correctness never depends on residency). The probe-derived
-  * families — `colscores:` (one per (index, query maps) pair, so one
-  * per landed batch for a live index), `qmaps:`, the `qkeys:` and
-  * `prunedids:` memos, ... — would otherwise grow for a serving
-  * session's lifetime.
+  * evicted (correctness never depends on residency). The query-derived
+  * join-search families — `colscores:` (one per (index, query maps)
+  * pair, so one per landed batch for a live index), `qmaps:`,
+  * `prunedverdict:`, `gbv-mapped:` and the `qkeys:` and `prunedids:`
+  * memos — would otherwise grow for a serving session's lifetime;
+  * the index-derived ones (`idxstats:`, `idxsketch:`, `tablebits:`)
+  * add one entry per index identity. The conjunction itself is never
+  * persisted: only its column scores are.
   *
   * A build runs once per key: concurrent callers of one missing key
   * wait on that key's lock and share the first caller's entry, so a

@@ -304,11 +304,12 @@ object IndexBuilder {
     * vocabulary-sized thin table whose single corpus pass amortizes
     * over every query ever run against the snapshot. The SESSION
     * path computes the same statistic in memory
-    * ([[graft.operators.JoinSearch.indexKeyStats]], what
-    * `searchTables` consumes); a cluster deployment loads this
-    * artifact instead and hands it to the pipeline explicitly:
+    * ([[graft.operators.JoinSearch.indexKeyStats]], what the hot-key
+    * guard consumes; `searchTables` counts its own probe output
+    * instead); a cluster deployment loads this artifact and hands it
+    * to the conjunction as its anchor statistic:
     * `conjunctionAnchored(probed, maps, n, Some(loadOrBuildKeyStats(
-    * spark, dir)))` — the `stats` parameter exists for exactly that.
+    * spark, dir)))`, which narrows it to the query's keys first.
     *
     * Staleness: the artifact rebuilds whenever the snapshot's
     * `_SUCCESS` is NEWER than the stats' — a compaction or forced

@@ -158,6 +158,32 @@ class WarmSearchSpec extends SparkTestBase {
       single == fromBatch.collect { case ("fresh", t, s) => (t, s) })
   }
 
+  test("the cross-checks, the stage queries and the conjunction persist nothing") {
+    // the frames they share with the serving search are resident first:
+    // the index, the query's `qmaps:` entry, and the `idxstats:` entry
+    // the supplied-statistic conjunction reads
+    JoinSearch.searchTables(idx, customerQuery, cols).collect()
+    JoinSearch.indexKeyStats(idx).count()
+    val m = JoinSearch.mappings(JoinSearch.prepareInput(customerQuery, cols), cols)
+    val probed = JoinSearch.probe(idx, m)
+    val stages = Seq("w1_cooccurrence_reduce", "j1_mapkey_join",
+      "w2_multiattr_matches", "a1_column_scores", "w3_top_columns")
+    val verifications: Seq[(String, () => DataFrame)] = Seq(
+      ("windowed", () => JoinSearch.searchTablesWindowed(idx, customerQuery, cols)),
+      ("row-wise", () => JoinSearch.searchTablesRowWise(idx, customerQuery, cols)),
+      ("cell-wise", () => JoinSearch.searchTablesCellWise(idx, customerQuery, cols)),
+      ("conjunction", () => JoinSearch.conjunctionAnchored(probed, m, cols.size)),
+      ("conjunction over index stats", () => JoinSearch.conjunctionAnchored(probed, m,
+        cols.size, Some(JoinSearch.indexKeyStats(idx))))) ++
+      stages.map(q => (q, () => SparkEntry.queries(q)(spark, sf0001)))
+    val resident = residentRdds()
+    for ((name, df) <- verifications) {
+      assert(df().collect().nonEmpty, s"$name is empty")
+      val added = residentRdds() -- resident
+      assert(added.isEmpty, s"$name left ${added.size} new resident RDDs")
+    }
+  }
+
   test("loading the live index runs no Spark job") {
     val delta = Files.createTempDirectory("graft-load-delta").toString
     landPlanted(delta, 0)
